@@ -651,15 +651,16 @@ object Dedup {
     canonicalized(df, idCol, pairs, localEdgeLimit, "canonicalizePropagation")(
       propagatedLabels(_, maxIter))
 
-  /** The shared size-then-strategy skeleton of the three canonicalize
+  /** The shared size-then-strategy skeleton of the four canonicalize
     * entry points: validate the id type, checkpoint the edge list once,
-    * route edge sets at or under `localEdgeLimit` to the driver
-    * union-find (size probe only when the gate can actually select —
-    * count() runs over checkpointed blocks, no recompute of `pairs`, but
-    * it is still a full pass a forced-distributed caller with
-    * localEdgeLimit=0 should not pay), and join the labels back onto the
-    * full corpus. Only the distributed `strategy` differs per entry
-    * point.
+    * count it, route edge sets at or under `localEdgeLimit` to the driver
+    * union-find, and join the labels back onto the full corpus. The count
+    * runs over the checkpointed blocks (no recompute of `pairs`) and is
+    * ALWAYS paid, forced-distributed callers (localEdgeLimit = 0)
+    * included, because it also sizes the distributed loop's shuffle
+    * width ([[ccLoopShufflePartitions]]). Only the distributed `strategy`
+    * differs per entry point; it runs under [[ccWidthLock]] with the
+    * session's shuffle width set for the loop and restored after.
     */
   private def canonicalized(df: DataFrame, idCol: String, pairs: DataFrame,
       localEdgeLimit: Long, opName: String)(
@@ -684,7 +685,7 @@ object Dedup {
     val lbl =
       if (localEdgeLimit > 0 && edgeCount <= localEdgeLimit)
         localLabels(undirected)
-      else {
+      else ccWidthLock.synchronized {
         // Every pass/round of the iterative strategies is a handful of
         // tiny-keyed exchanges and one convergence action; left at the
         // session default their per-pass fixed cost is ∝ the shuffle
@@ -696,19 +697,30 @@ object Dedup {
         // instead (guide §2.2: fewer, larger partitions; the session
         // default stays the ceiling so at-scale CcProbe axes are
         // unchanged), restore the session conf after the strategy's
-        // actions complete.
-        val spark = undirected.sparkSession
+        // actions complete — under [[ccWidthLock]], so a concurrent CC
+        // call can neither read this call's loop width as its "before"
+        // nor restore its own over it.
+        val conf = undirected.sparkSession.conf
         val key = "spark.sql.shuffle.partitions"
-        val before = spark.conf.get(key)
-        spark.conf.set(key,
-          ccLoopShufflePartitions(before.toInt, edgeCount).toString)
-        try strategy(undirected) finally spark.conf.set(key, before)
+        val before = conf.get(key)
+        conf.set(key, ccLoopShufflePartitions(before.toInt, edgeCount).toString)
+        try strategy(undirected) finally conf.set(key, before)
       }
     nodes.join(lbl, Seq("id"), "left")
       .select(col("id").as(idCol),
         coalesce(col("lbl"), col("id")).as("canon_id"),
         (coalesce(col("lbl"), col("id")) =!= col("id")).as("is_dup"))
   }
+
+  /** Makes the distributed branch's set → strategy → restore of the
+    * session's shuffle width atomic with respect to other CC calls. Two
+    * unserialized calls on one session could interleave as set A, set B
+    * (reading A's loop width as its "before"), restore A, restore B —
+    * leaving the session at the loop width for good. Distributed CC
+    * calls therefore run one at a time per JVM; the union-find branch
+    * and the size probe take no lock.
+    */
+  private val ccWidthLock = new Object
 
   /** Edges per shuffle partition inside the iterative CC loops: the
     * partition count is `ceil(edges / this)`, capped at the session
@@ -785,9 +797,10 @@ object Dedup {
     * signature collision can only abort loudly, never mislabel; the
     * check runs once.
     *
-    * Rounds are plan-truncated and promptly released through the same
-    * [[residentLevel]] machinery as propagation (the probe-measured
-    * cure for the exponential-plan OOM class).
+    * Rounds run through the same [[fixpoint]] loop as propagation, so
+    * they are plan-truncated and promptly released by the same
+    * [[residentLevel]] machinery (the probe-measured cure for the
+    * exponential-plan OOM class).
     */
   def canonicalizeStar(df: DataFrame, idCol: String, pairs: DataFrame,
       maxRounds: Int = 50, localEdgeLimit: Long = 500000L): DataFrame =
@@ -887,7 +900,8 @@ object Dedup {
     require(starRounds >= 0 || starRounds == AutoStarRounds,
       s"starRounds must be non-negative or AutoStarRounds, got $starRounds")
     canonicalized(df, idCol, pairs, localEdgeLimit, "canonicalizeHybrid")(
-      hybridLabels(_, starRounds, maxIter))
+      if (starRounds == AutoStarRounds) autoLabels(_, maxIter)
+      else pinnedLabels(_, starRounds, maxIter))
   }
 
   /** Sentinel `starRounds` value selecting [[canonicalizeHybrid]]'s
@@ -953,8 +967,7 @@ object Dedup {
   private def edgeSignature(e: DataFrame): (Long, java.math.BigDecimal) = {
     val r = e.agg(count(lit(1)),
       sum(xxhash64(col("a"), col("b")).cast("decimal(38,0)"))).first()
-    (r.getLong(0),
-      if (r.isNullAt(1)) java.math.BigDecimal.ZERO else r.getDecimal(1))
+    (r.getLong(0), Option(r.getDecimal(1)).getOrElse(java.math.BigDecimal.ZERO))
   }
 
   /** Structural star-forest test on a canonical (a < b) edge set: no
@@ -976,112 +989,141 @@ object Dedup {
       e.groupBy(col("b")).agg(count(lit(1)).as("_n"))
         .filter(col("_n") > 1).isEmpty
 
-  /** Alternating large-star/small-star rounds to the star-forest
-    * fixpoint (see [[canonicalizeStar]]); returns a resident (id, lbl)
-    * frame over edge-touched nodes.
+  /** A resident level of an iterative CC strategy after the shared
+    * fixpoint loop: the last level, the thunk that releases it, the
+    * steps taken, and whether the loop stopped on a (confirmed)
+    * fixpoint rather than on its budget.
+    */
+  private final case class Fixpoint(level: DataFrame, free: () => Unit,
+      steps: Int, converged: Boolean)
+
+  /** THE iterative loop behind every distributed CC strategy — min-label
+    * propagation passes and large-star/small-star rounds alike, each
+    * strategy being a schedule of it ([[propagateOver]],
+    * [[starLabels]], [[pinnedLabels]], [[autoLabels]]). From a resident
+    * `start` level whose signature the caller already read, each step
+    * builds the next level, makes it resident through [[residentLevel]]
+    * (plan-truncated every `truncateEvery` steps), reads its
+    * `signature` — the action that fully materializes it — and only
+    * then frees its predecessor. An unchanged signature is a candidate
+    * fixpoint that `confirm` runs over the already-resident level (a
+    * structural certificate for the star schedules, nothing for
+    * propagation, whose label sum can only decrease); the loop stops
+    * there or when `budget` steps are spent, and the caller owns what
+    * it returns.
+    *
+    * Truncation cadence: propagation truncates every [[truncateLevels]]
+    * passes, star rounds every 2 — one star round's plan references its
+    * input edge set ~12 times (the directed view twice per star op,
+    * each joined against a min-aggregate of itself, twice per round),
+    * so its per-round tree fan-out is ~12x against propagation's linear
+    * growth; untruncated, 7 rounds already built a ~12^7-node plan
+    * string and OOM'd the 22-chain spec.
+    */
+  private def fixpoint[S](start: DataFrame, free: () => Unit, startSig: S,
+      step: DataFrame => DataFrame, truncateEvery: Int, signature: DataFrame => S,
+      confirm: DataFrame => Boolean, budget: Int): Fixpoint = {
+    var (level, freeLevel, prev, steps, converged) =
+      (start, free, startSig, 0, false)
+    while (!converged && steps < budget) {
+      val (next, freeNext) = residentLevel(step(level),
+        truncate = (steps + 1) % truncateEvery == 0)
+      val cur = signature(next) // fully materializes `next`
+      converged = cur == prev && confirm(next)
+      freeLevel() // level k-1's blocks are no longer referenced
+      level = next
+      freeLevel = freeNext
+      prev = cur
+      steps += 1
+    }
+    Fixpoint(level, freeLevel, steps, converged)
+  }
+
+  /** Up to `budget` alternating star rounds from a canonical (a < b)
+    * edge set, made resident and signed first so a round-1 fixpoint is
+    * detectable by the same two-consecutive-reads comparison as every
+    * later round (`born` runs once that signature has materialized the
+    * level — the auto schedule releases its telemetry frame there).
+    * `confirm` defaults to the structural test alone: inside a bounded
+    * schedule a 2^-64 signature collision reads false and simply keeps
+    * contracting, because the propagation finisher completes the job
+    * regardless.
+    */
+  private def starFrom(canonical: DataFrame, budget: Int,
+      confirm: DataFrame => Boolean = isStarForest,
+      born: () => Unit = () => ()): Fixpoint = {
+    val (edges, free) = residentLevel(canonical, truncate = false)
+    val birthSig = edgeSignature(edges)
+    born()
+    fixpoint(edges, free, birthSig, starRound, 2, edgeSignature, confirm, budget)
+  }
+
+  /** Labels off a star-forest fixpoint (a = component min, b = member):
+    * members label to their center, centers to themselves (via the
+    * caller's coalesce); groupBy-min rather than a bare projection so a
+    * hypothetical non-star residue could still only tighten labels.
+    */
+  private def readOff(forest: DataFrame): DataFrame =
+    forest.groupBy(col("b").as("id")).agg(min(col("a")).as("lbl"))
+
+  /** Star schedule UNTIL FIXPOINT (see [[canonicalizeStar]]); returns a
+    * resident (id, lbl) frame over edge-touched nodes. Here the
+    * structural fixpoint confirmation ([[isStarForest]]) runs over the
+    * already-resident level, certifies the labeling itself, and turns
+    * the 2^-64 signature-collision event into a loud abort instead of a
+    * silent mislabel.
     */
   private def starLabels(undirected: DataFrame, maxRounds: Int): DataFrame = {
-    var (edges, freeEdges) = residentLevel(starNorm(
-      undirected.select(col("src"), col("dst"))), truncate = false)
-    var prev = edgeSignature(edges)
-    var it = 0
-    var done = false
-    // star rounds truncate every 2 levels, not [[truncateLevels]]: one
-    // round's plan references its input edge set ~12 times (directed
-    // view twice per star op, each joined against a min-aggregate of
-    // itself, twice per round), so the per-round tree fan-out is ~12x
-    // against propagation's 2x — untruncated, 7 rounds already built a
-    // ~12^7-node plan string and OOM'd the 22-chain spec
-    while (!done && it < maxRounds) {
-      val (next, freeNext) = residentLevel(
-        starRound(edges), truncate = (it + 1) % 2 == 0)
-      val cur = edgeSignature(next) // fully materializes `next`
-      if (cur == prev) {
-        // structural fixpoint confirmation (see [[isStarForest]]): runs
-        // over the already-resident `next`, certifies the labeling
-        // itself, and turns the 2^-64 signature-collision event into a
-        // loud abort instead of a silent mislabel
-        done = isStarForest(next)
-        require(done, "edge-set hash signature converged on a non-star-forest " +
-          "(hash collision): raise maxRounds or report — this is a 2^-64 event")
-      }
-      freeEdges()
-      edges = next
-      freeEdges = freeNext
-      prev = cur
-      it += 1
-    }
-    require(done,
+    val r = starFrom(starNorm(undirected), maxRounds, e => {
+      require(isStarForest(e), "edge-set hash signature converged on a " +
+        "non-star-forest (hash collision): raise maxRounds or report — this " +
+        "is a 2^-64 event")
+      true
+    })
+    require(r.converged,
       s"star contraction did not converge within $maxRounds rounds")
-    // fixpoint edge set is a star forest (a = component min, b = member):
-    // members label to their center, centers to themselves (via the
-    // caller's coalesce); groupBy-min rather than a bare projection so a
-    // hypothetical non-star residue could still only tighten labels
-    edges.groupBy(col("b").as("id")).agg(min(col("a")).as("lbl"))
+    readOff(r.level)
   }
 
-  /** The hybrid strategy's label computation (see [[canonicalizeHybrid]]):
+  /** The PINNED hybrid schedule (see [[canonicalizeHybrid]]): `k`
     * alternating contraction rounds — each at least halving component
     * diameter — then min-label propagation on the flattened edge set.
-    * The round budget is either pinned (`starRounds >= 0`) or measured
-    * per graph ([[AutoStarRounds]] → [[autoLabels]]). Converging to the
-    * star forest DURING the star budget short-circuits propagation
-    * entirely (labels read off the forest, structurally confirmed);
-    * otherwise the contracted edges are handed to [[propagatedLabels]],
-    * whose own exhaustion fallback (→ [[warmStartFallback]]) still
-    * bounds the worst case, so `starRounds` and `maxIter` tune cost,
-    * never correctness.
+    * `k = 0` IS pure propagation ([[canonicalizePropagation]]): no
+    * canonical star level is built. Converging to the star forest
+    * DURING the budget short-circuits propagation entirely (labels read
+    * off the forest, structurally confirmed); otherwise the contracted
+    * edges go to [[handOff]], whose propagation finisher's own
+    * exhaustion fallback (→ [[warmStartFallback]]) still bounds the
+    * worst case, so `k` and `maxIter` tune cost, never correctness.
     */
-  private def hybridLabels(undirected: DataFrame, starRounds: Int,
+  private def pinnedLabels(undirected: DataFrame, k: Int,
       maxIter: Int): DataFrame =
-    if (starRounds == AutoStarRounds) autoLabels(undirected, maxIter)
-    else {
-    var (edges, freeEdges) = residentLevel(starNorm(
-      undirected.select(col("src"), col("dst"))), truncate = false)
-    var prev = edgeSignature(edges)
-    var it = 0
-    var forest = false
-    while (!forest && it < starRounds) {
-      val (next, freeNext) = residentLevel(
-        starRound(edges), truncate = (it + 1) % 2 == 0) // see starLabels
-      val cur = edgeSignature(next) // fully materializes `next`
-      // an unchanged signature inside the star budget is a candidate
-      // early fixpoint; the structural test makes it exact (and a
-      // collision simply keeps contracting — propagation would finish
-      // the job regardless, so no abort is needed on this path)
-      forest = cur == prev && isStarForest(next)
-      freeEdges()
-      edges = next
-      freeEdges = freeNext
-      prev = cur
-      it += 1
-    }
-    if (forest)
-      edges.groupBy(col("b").as("id")).agg(min(col("a")).as("lbl"))
-    else finishWithPropagation(edges, freeEdges, maxIter)
-  }
+    if (k == 0) propagatedLabels(undirected, maxIter)
+    else handOff(starFrom(starNorm(undirected), k), maxIter)
 
-  /** Hand a diameter-collapsed edge set to the propagation finisher as
-    * a FLAT LogicalRDD leaf: after an odd (or zero) round budget the
-    * frame is cache-resident but its plan is still the nested
-    * star-round tree, and every propagation level's AQE plan
+  /** The end of a bounded star schedule: labels read off a confirmed
+    * forest, or the diameter-collapsed edge set handed to the
+    * propagation finisher as a FLAT LogicalRDD leaf. After an odd round
+    * budget the level is cache-resident but its plan is still the
+    * nested star-round tree, and every propagation level's AQE plan
     * description would re-render that whole nest — measured 2.5x the
     * finisher's wall on the lollipop spec before the truncation. The
-    * propagation loop runs entirely inside the call (every level
-    * action included), so the contracted frame is released as soon as
-    * it returns.
+    * propagation loop runs entirely inside the call (every level action
+    * included), so the contracted level is released as soon as it
+    * returns.
     */
-  private def finishWithPropagation(edges: DataFrame, freeEdges: () => Unit,
-      maxIter: Int): DataFrame = {
-    val flat = edges.queryExecution.analyzed match {
-      case _: org.apache.spark.sql.execution.LogicalRDD => edges
-      case _ => edges.localCheckpoint(true, StorageLevel.MEMORY_AND_DISK_SER)
+  private def handOff(r: Fixpoint, maxIter: Int): DataFrame =
+    if (r.converged) readOff(r.level)
+    else {
+      val flat = r.level.queryExecution.analyzed match {
+        case _: org.apache.spark.sql.execution.LogicalRDD => r.level
+        case _ => r.level.localCheckpoint(true, StorageLevel.MEMORY_AND_DISK_SER)
+      }
+      val lbl = propagatedLabels(
+        flat.select(col("a").as("src"), col("b").as("dst")), maxIter)
+      r.free()
+      lbl
     }
-    val lbl = propagatedLabels(
-      flat.select(col("a").as("src"), col("b").as("dst")), maxIter)
-    freeEdges()
-    lbl
-  }
 
   /** Structural telemetry of a canonical (a < b) edge set, one
     * groupBy-shaped pass (map-side partial agg, then one shuffle of
@@ -1199,105 +1241,68 @@ object Dedup {
     */
   private val autoHandOffIter = 2 + 2 * autoCollapseTarget.toInt
 
-  /** The measured-budget hybrid (see [[canonicalizeHybrid]]): ONE
-    * [[forestStats]] telemetry aggregate at birth — FUSED since round
-    * 20 with the propagation finisher's own edge-frame materialization,
-    * so the common zero-round hand-off pays no dedicated telemetry
-    * chain — yields the residual-diameter estimate D (max of the
-    * ordered and degree proxies —
-    * [[ForestStats.diameterEstimate]]); `round(log2 D) − 2`
-    * star rounds are scheduled from it and then propagation finishes
+  /** The MEASURED schedule (see [[canonicalizeHybrid]]): ONE
+    * [[forestStats]] telemetry aggregate at birth yields the
+    * residual-diameter estimate D (max of the ordered and degree proxies
+    * — [[ForestStats.diameterEstimate]]); `round(log2 D) − 2` star
+    * rounds are scheduled from it and then propagation finishes
     * unconditionally — re-measuring mid-flight is deliberately absent
     * because both proxies read SIZE, not depth, on contracted trees
     * (measured: 13.0 after 2 rounds on a 16-chain at true depth ~4),
     * while the per-round halving the schedule leans on is the SoCC'14
-    * guarantee. Rounds materialize through the same cheap
-    * [[edgeSignature]] aggregate as the fixed path, with the
-    * comparison seeded by the birth signature so a round-1 fixpoint is
-    * detectable; an unchanged signature is a candidate fixpoint —
-    * confirmed structurally, it reads labels off the forest and skips
-    * propagation (the path an overestimated D on cliques/bushy graphs
-    * exits through). Every decision is traced through [[traceSink]]
-    * (stderr by default) — the observable the no-knob spec pins.
+    * guarantee. Rounds run through the shared [[fixpoint]] loop with the
+    * comparison seeded by the birth signature; an unchanged signature is
+    * a candidate fixpoint — confirmed structurally, it reads labels off
+    * the forest and skips propagation (the path an overestimated D on
+    * cliques/bushy graphs exits through). Every decision is traced
+    * through [[traceSink]] (stderr by default) — the observable the
+    * no-knob spec pins.
+    *
+    * The birth telemetry is FUSED (round 20; VERDICT r19 item 3): it has
+    * no materialization chain of its own. The schedule builds the SAME
+    * [[propagationEdges]] frame the propagation finisher consumes
+    * (canonical dedup + self-loops, bidirectional, dst-partitioned,
+    * persisted), and [[forestStats]]' dst-aligned aggregate is the
+    * action that populates it. The r18/r19 shape paid a dedicated
+    * canonical persist, a union-shaped two-direction telemetry scan,
+    * and an extra eager checkpoint on the hand-off; on a shallow graph
+    * (the common near-dup case, where the answer is "zero rounds") that
+    * premium measured 1.8x pure propagation (star_perm at 10M: 17.9 vs
+    * 10.2 s). Fused, the zero-round hand-off passes the frame to
+    * [[propagateOver]] as-is, so the default caller's premium shrinks to
+    * one in-cache aggregate; a graph that already IS a min-centered star
+    * forest (certified by the same telemetry) reads its labels off the
+    * resident frame with zero rounds and zero propagation passes.
     */
   private def autoLabels(undirected: DataFrame, maxIter: Int): DataFrame = {
-    // FUSED birth telemetry (round 20; VERDICT r19 item 3): the
-    // telemetry no longer has a materialization chain of its own. The
-    // auto path builds the SAME [[propagationEdges]] frame the
-    // propagation finisher consumes (canonical dedup + self-loops,
-    // bidirectional, dst-partitioned, persisted), and [[forestStats]]'
-    // dst-aligned aggregate is the action that populates it. The
-    // r18/r19 shape paid a dedicated canonical persist, a union-shaped
-    // two-direction telemetry scan, and an extra eager checkpoint on
-    // the hand-off; on a shallow graph (the common near-dup case, where
-    // the answer is "zero rounds") that premium measured 1.8x pure
-    // propagation (star_perm at 10M: 17.9 vs 10.2 s). Fused, the
-    // zero-round hand-off passes the frame to [[propagateOver]] as-is,
-    // so the default caller's premium shrinks to one in-cache
-    // aggregate.
     val bidir = propagationEdges(undirected)
     val stats = forestStats(bidir) // the action that populates the cache
     trace(
       f"[graft] hybrid auto: residual-diameter estimate " +
         f"${stats.diameterEstimate}%.1f at birth")
-    if (stats.isForest) {
-      // already a min-centered star forest (certified by the same
-      // telemetry): read the labels off — zero rounds, zero propagation
-      // passes, one dst-aligned aggregate over the resident frame
-      trace(
-        "[graft] hybrid auto: star-forest fixpoint after 0 star round(s)")
-      return bidir.filter(col("src") < col("dst"))
-        .groupBy(col("dst").as("id")).agg(min(col("src")).as("lbl"))
-    }
+    def decided(forest: Boolean, rounds: Int, scheduled: Int): Unit = trace(
+      if (forest) s"[graft] hybrid auto: star-forest fixpoint after $rounds star round(s)"
+      else s"[graft] hybrid auto: hand-off to propagation after $rounds star " +
+        s"round(s) (scheduled $scheduled from the birth estimate)")
+    // the canonical a < b form is a shuffle-free filter off the resident
+    // bidirectional frame
+    val canonical = bidir.filter(col("src") < col("dst"))
+      .select(col("src").as("a"), col("dst").as("b"))
     val scheduled = math.min(autoMaxStarRounds, math.max(0,
       math.round(math.log(stats.diameterEstimate) / math.log(2.0)).toInt - 2))
-    if (scheduled == 0) {
+    if (stats.isForest) { decided(forest = true, 0, 0); readOff(canonical) }
+    else if (scheduled == 0) {
       // the common near-dup hand-off: the finisher consumes the
       // telemetry frame directly — no canonical level, no re-checkpoint
-      trace(
-        "[graft] hybrid auto: hand-off to propagation after 0 star " +
-          "round(s) (scheduled 0 from the birth estimate)")
-      return propagateOver(bidir, math.min(maxIter, autoHandOffIter))
-    }
-    // star rounds scheduled (the deep-graph path): the canonical a < b
-    // form is a shuffle-free filter off the resident bidirectional
-    // frame; the birth signature doubles as the action that
-    // materializes the canonical level, after which the bidirectional
-    // frame is released
-    var (edges, freeEdges) = residentLevel(
-      bidir.filter(col("src") < col("dst"))
-        .select(col("src").as("a"), col("dst").as("b")), truncate = false)
-    var rounds = 0
-    var forest = false
-    // seeded with the BIRTH signature so a round-1 fixpoint is
-    // detectable by the same two-consecutive-reads comparison as every
-    // later round
-    var prevSig: (Long, java.math.BigDecimal) = edgeSignature(edges)
-    bidir.unpersist()
-    while (!forest && rounds < scheduled) {
-      val (next, freeNext) = residentLevel(
-        starRound(edges), truncate = (rounds + 1) % 2 == 0) // see starLabels
-      val cur = edgeSignature(next) // fully materializes `next`
-      // an unchanged signature is a candidate early fixpoint; the
-      // structural test makes it exact (on a 2^-64 collision the test
-      // reads false and the schedule simply CONTINUES contracting —
-      // propagation finishes the job regardless, so no abort is needed)
-      forest = cur == prevSig && isStarForest(next)
-      prevSig = cur
-      freeEdges()
-      edges = next
-      freeEdges = freeNext
-      rounds += 1
-    }
-    if (forest) {
-      trace(
-        s"[graft] hybrid auto: star-forest fixpoint after $rounds star round(s)")
-      edges.groupBy(col("b").as("id")).agg(min(col("a")).as("lbl"))
+      decided(forest = false, 0, 0)
+      propagateOver(bidir, math.min(maxIter, autoHandOffIter))
     } else {
-      trace(
-        s"[graft] hybrid auto: hand-off to propagation after $rounds star " +
-          s"round(s) (scheduled $scheduled from the birth estimate)")
-      finishWithPropagation(edges, freeEdges, math.min(maxIter, autoHandOffIter))
+      // star rounds scheduled (the deep-graph path): the birth signature
+      // doubles as the action that materializes the canonical level,
+      // after which the bidirectional frame is released
+      val r = starFrom(canonical, scheduled, born = () => { bidir.unpersist(); () })
+      decided(r.converged, r.steps, scheduled)
+      handOff(r, math.min(maxIter, autoHandOffIter))
     }
   }
 
@@ -1367,24 +1372,26 @@ object Dedup {
       .repartition(col("dst"))
       .persist()
 
-  /** The propagation loop proper, over a [[propagationEdges]] frame —
+  /** The PROPAGATION schedule, over a [[propagationEdges]] frame —
     * built by [[propagatedLabels]], or handed over already-materialized
     * by the fused-telemetry auto path ([[autoLabels]]'s zero-round
     * hand-off, which reuses its telemetry frame instead of paying a
     * second materialization chain). Owns the frame: every exit path
     * unpersists it once the labels no longer need it.
     *
-    * Each pass attaches the current labels on dst (reusing the frame's
-    * resident hash partitioning) and takes the per-src minimum; the
-    * self-loop rows fold each node's OWN label into that minimum, so
-    * one join + one aggregate per pass replaces the old neighbor-min +
-    * left-join-back shape (two shuffle ops per pass, not three) — and,
-    * decisive for the driver at high iteration counts, each level's
-    * plan references its predecessor ONCE, so plan trees grow LINEARLY
-    * in the pass count between [[residentLevel]] truncations instead of
-    * doubling per pass (the round-20 heap-pressure fix: the 2^k tree
-    * OOM'd an 8 GB driver at 8 untruncated levels once the level base
-    * carried the fused telemetry frame's deeper subtree).
+    * Each pass of the shared [[fixpoint]] loop attaches the current
+    * labels on dst (reusing the frame's resident hash partitioning) and
+    * takes the per-src minimum; the self-loop rows fold each node's OWN
+    * label into that minimum, so one join + one aggregate per pass
+    * replaces the old neighbor-min + left-join-back shape (two shuffle
+    * ops per pass, not three) — and, decisive for the driver at high
+    * iteration counts, each level's plan references its predecessor
+    * ONCE, so plan trees grow LINEARLY in the pass count between
+    * [[residentLevel]] truncations instead of doubling per pass (the
+    * round-20 heap-pressure fix: the 2^k tree OOM'd an 8 GB driver at 8
+    * untruncated levels once the level base carried the fused telemetry
+    * frame's deeper subtree). Convergence is the label-sum fixpoint:
+    * labels only decrease, so an unchanged sum needs no confirmation.
     */
   private def propagateOver(edges: DataFrame, maxIter: Int): DataFrame = {
     // propagate only over edge-touched nodes: the label frame scales with
@@ -1396,29 +1403,13 @@ object Dedup {
     // the initial level reads the node set off the self-loop rows — a
     // shuffle-free filter of the resident frame whose dst-partitioning
     // survives the alias into (id, lbl)
-    var (lbl, freeLbl) = residentLevel(
+    val (lbl, freeLbl) = residentLevel(
       edges.filter(col("src") === col("dst"))
         .select(col("dst").as("id"), col("dst").as("lbl")), truncate = false)
-    // labels only decrease; decimal sum avoids overflow on wide id spaces
-    def labelSum(d: DataFrame): java.math.BigDecimal = {
-      val v = d.agg(sum(col("lbl").cast("decimal(38,0)"))).first().getDecimal(0)
-      if (v == null) java.math.BigDecimal.ZERO else v
-    }
-    var prev = labelSum(lbl)
-    var it = 0
-    var done = false
-    while (!done && it < maxIter) {
-      val (next, freeNext) = residentLevel(
-        propagate(lbl), truncate = (it + 1) % truncateLevels == 0)
-      val cur = labelSum(next) // fully materializes `next`
-      freeLbl() // level k-1's blocks are no longer referenced
-      lbl = next
-      freeLbl = freeNext
-      done = cur.compareTo(prev) == 0
-      prev = cur
-      it += 1
-    }
-    if (!done) {
+    val r = fixpoint(lbl, freeLbl, labelSum(lbl), propagate, truncateLevels,
+      labelSum, _ => true, maxIter)
+    if (r.converged) { edges.unpersist(); r.level }
+    else {
       // A diameter past maxIter is a GRAPH-SHAPE surprise, not a reason
       // to kill a 100 TB pipeline: the switch is loud on stderr because
       // hitting it usually means the caller's pair graph is chain-shaped
@@ -1426,9 +1417,17 @@ object Dedup {
       trace(s"[graft] min-label propagation did not converge " +
         s"within $maxIter iterations (component diameter exceeds it); " +
         "falling back to star contraction of the label-contracted residue")
-      warmStartFallback(edges, lbl, freeLbl)
-    } else { edges.unpersist(); lbl }
+      warmStartFallback(edges, r.level, r.free)
+    }
   }
+
+  /** Sum of a level's labels — they only decrease, so an unchanged sum
+    * is the propagation fixpoint; decimal(38,0) avoids overflow on wide
+    * id spaces, and the Scala BigDecimal compares by value.
+    */
+  private def labelSum(d: DataFrame): BigDecimal =
+    BigDecimal(Option(d.agg(sum(col("lbl").cast("decimal(38,0)")))
+      .first().getDecimal(0)).getOrElse(java.math.BigDecimal.ZERO))
 
   /** Edge budget under which the warm-start fallback's residual
     * label-space graph routes to the driver union-find — the same
@@ -1515,8 +1514,8 @@ object Dedup {
     d.queryExecution.analyzed.collectFirst {
       case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd }
 
-  /** Level residency for the iterative component algorithms
-    * ([[propagatedLabels]], [[starLabels]]), measured on CcProbe's axes
+  /** Level residency for the shared CC [[fixpoint]] loop (every
+    * propagation pass and star round), measured on CcProbe's axes
     * (docs/SCALING.md round 15) — each level is made resident one of two
     * ways, and the returned thunk releases it; callers free level k−1 as
     * soon as level k is material (the earlier retain-until-exit shape

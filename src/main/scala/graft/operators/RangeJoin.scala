@@ -181,14 +181,18 @@ object RangeJoin {
     * rank (e.g. `rand()`) draws independent values in the threshold pass
     * and in the final window/sweep ordering, so thresholding on one draw
     * could drop rows the other draw would have kept. Determinism is read
-    * off the ANALYZED projection (the unresolved tree under-reports it:
-    * `functions.rand()` arrives as an UnresolvedFunction whose default
-    * `deterministic` is true).
+    * off the WHOLE analyzed plan, not its root projection: the
+    * unresolved tree under-reports it (`functions.rand()` arrives as an
+    * UnresolvedFunction whose default `deterministic` is true), and a
+    * rank that merely NAMES a non-deterministic column of the interval
+    * frame (`intervals.withColumn("r", rand(7))`, rank `col("r")`) is an
+    * attribute at the root — its draw sits in a node below, so only the
+    * plan-wide `deterministic` (every node's expressions) sees it.
     */
-  private def rankIsIntervalOnly(intervals: DataFrame,
+  private[operators] def rankIsIntervalOnly(intervals: DataFrame,
       rank: org.apache.spark.sql.Column): Boolean =
     scala.util.Try(intervals.select(rank).queryExecution.analyzed
-      .expressions.forall(_.deterministic)).getOrElse(false)
+      .deterministic).getOrElse(false)
 
   /** Measured-density gate for [[pruneDominatedBins]] (round 21): the
     * prune's threshold pass is a FIXED cost — one window over the

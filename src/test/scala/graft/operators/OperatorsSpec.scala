@@ -473,6 +473,47 @@ class OperatorsSpec extends SparkSpec {
       "cc loop must restore the session's shuffle partitions")
   }
 
+  test("concurrent forced-distributed CC calls keep the session's shuffle width") {
+    // Two CC calls on one session, released together: unserialized, their
+    // set/restore of the loop width interleaves (set A, set B reading A's
+    // width as its "before", restore A, restore B) and leaves the session
+    // at width 1 for good. Each must still return its own min-label
+    // fixpoint, and the session must end where it started.
+    val key = "spark.sql.shuffle.partitions"
+    val before = spark.conf.get(key)
+    // the second chain is longer, so its stale restore lands last
+    val graphs = Seq(0L -> 8L, 100L -> 12L).map { case (base, len) =>
+      (base, len, (base to base + len).toDF("doc_id"),
+        (base until base + len).map(j => (j, j + 1)).toDF("a", "b"))
+    }
+    val start = new java.util.concurrent.CountDownLatch(1)
+    val outs = new java.util.concurrent.ConcurrentHashMap[Long,
+      scala.util.Try[Map[Long, Long]]]()
+    val threads = graphs.zipWithIndex.map { case ((base, _, ids, pairs), i) =>
+      new Thread(() => {
+        start.await()
+        // the second caller enters while the first one's loop width is
+        // set: the interleaving that strands an unserialized restore
+        val deadline = System.nanoTime() + 30000000000L
+        while (i == 1 && spark.conf.get(key) == before &&
+            System.nanoTime() < deadline) Thread.sleep(1)
+        outs.put(base, scala.util.Try(Dedup.canonicalizePropagation(ids,
+            "doc_id", pairs, localEdgeLimit = 0L).collect()
+          .map(r => r.getLong(0) -> r.getLong(1)).toMap))
+        ()
+      })
+    }
+    threads.foreach(_.start())
+    start.countDown()
+    threads.foreach(_.join())
+    graphs.foreach { case (base, len, _, _) =>
+      assert(outs.get(base).get == (base to base + len).map(_ -> base).toMap,
+        s"chain at $base")
+    }
+    assert(spark.conf.get(key) == before,
+      s"concurrent CC calls left the session at width ${spark.conf.get(key)}")
+  }
+
   test("incrementalExact: store wins over batch order; re-ingest is idempotent") {
     val incoming = Seq(
       (10L, "alpha"), (11L, "alpha"), // in-batch dup pair, min id wins
@@ -1432,6 +1473,33 @@ class OperatorsSpec extends SparkSpec {
       .count()
     assert(prunedN < ib.count() / 2,
       s"prune kept $prunedN of ${ib.count()} bin rows — not biting")
+  }
+
+  test("range-join top-k prune: a non-deterministic rank is vetoed plan-wide") {
+    // the prune thresholds on one evaluation of the rank and the final
+    // cap orders on another, so a random rank must veto it even when the
+    // draw sits below the root projection (the rank only NAMES it)
+    val d0 = lit("1970-01-01").cast("date")
+    val ivs = Seq((1L, 0, 9), (2L, 3, 40)).toDF("iv_id", "s", "e")
+      .select(col("iv_id"), date_add(d0, col("s")).as("lo"),
+        date_add(d0, col("e")).as("hi"))
+    assert(!RangeJoin.rankIsIntervalOnly(ivs.withColumn("r", rand(7)), col("r")))
+    assert(!RangeJoin.rankIsIntervalOnly(ivs, rand(7)))
+    // j13b's interval side and rank, over a parquet scan as in the query:
+    // deterministic, so the gate still decides
+    val dir = java.nio.file.Files.createTempDirectory("graft_rank").toString
+    Seq((199L, "1995-03-01"), (398L, "1996-07-15"))
+      .toDF("o_orderkey", "o_orderdate")
+      .write.mode("overwrite").parquet(s"$dir/orders.parquet")
+    val iv = spark.read.parquet(s"$dir/orders.parquet")
+      .filter(col("o_orderkey") % 199 === 0)
+      .select(col("o_orderkey"),
+        to_date(col("o_orderdate")).as("lo"),
+        date_add(to_date(col("o_orderdate")),
+          (col("o_orderkey") % 61).cast("int")).as("hi"))
+    assert(RangeJoin.rankIsIntervalOnly(iv,
+      struct((-datediff(col("lo"), to_date(lit("1970-01-01")))).as("r"),
+        col("o_orderkey").as("t"))))
   }
 
   test("range-join top-k prune density gate: sparse skips, dense prunes, same answer") {
