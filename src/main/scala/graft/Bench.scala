@@ -1,7 +1,9 @@
 package graft
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
-import org.apache.spark.sql.{Dataset, Encoder, Encoders, SparkSession}
+import org.apache.spark.sql.{Dataset, Encoder, SparkSession}
+
+import graft.tools.Measure
+import graft.tools.Measure.productEncoder
 
 /** Benchmark main (driver contract): run every SparkEntry query against
   * SPARK_GRAFT_SF_DIR and print one JSON line with per-query seconds.
@@ -28,36 +30,6 @@ import org.apache.spark.sql.{Dataset, Encoder, Encoders, SparkSession}
   */
 object Bench {
 
-  /** Cluster-wide task-metric sums (scale telemetry): shuffle bytes
-    * written across all exchanges and bytes spilled to disk. Listener
-    * delivery is asynchronous — snapshots are taken after draining the
-    * listener bus ([[org.apache.spark.graftbench.ListenerDrain]]), so
-    * values are exact for a quiesced query unless the drain times out;
-    * they grade plan SHAPE (does this query shuffle/spill at all, and
-    * how much) round over round.
-    */
-  private final class MetricsListener extends SparkListener {
-    private val shuffleWrite = new java.util.concurrent.atomic.AtomicLong
-    private val diskSpill = new java.util.concurrent.atomic.AtomicLong
-    // max-over-tasks of peakExecutionMemory: the per-task memory high-water
-    // mark is what decides whether a partition fits an executor at scale
-    // (a sum would overstate peaks that never coexist). Reset per rep —
-    // queries run strictly one at a time, so the reset cannot race a
-    // concurrent query's tasks, only stragglers from the previous rep.
-    private val peakTaskMem = new java.util.concurrent.atomic.AtomicLong
-    override def onTaskEnd(te: SparkListenerTaskEnd): Unit = {
-      val m = te.taskMetrics
-      if (m != null) {
-        shuffleWrite.addAndGet(m.shuffleWriteMetrics.bytesWritten)
-        diskSpill.addAndGet(m.diskBytesSpilled)
-        peakTaskMem.accumulateAndGet(m.peakExecutionMemory, Math.max(_, _))
-      }
-    }
-    def snap(): (Long, Long) = (shuffleWrite.get, diskSpill.get)
-    def resetPeak(): Unit = peakTaskMem.set(0L)
-    def peak(): Long = peakTaskMem.get
-  }
-
   def main(args: Array[String]): Unit = {
     // every number below is f"...%.3f"-interpolated into JSON — a
     // comma-decimal default locale would emit an unparseable artifact
@@ -73,14 +45,12 @@ object Bench {
     // contention (all at/below prior-round times when re-run in isolation).
     // A single-shot sweep cannot tell that apart from a real regression;
     // the min over >=2 reps discards one-off contention windows.
-    val reps = sys.env.getOrElse("SPARK_GRAFT_REPS", "2").toInt
+    val reps = Measure.envCount("SPARK_GRAFT_REPS").getOrElse(2)
     // SPARK_GRAFT_BENCH_SCALE=N (opt-in; never set by the driver): sweep
     // the HEAVY family at N x the base sf — parsed up here because the
     // recycle cadence below depends on the mode. Full rationale at the
     // (sweepNames, queryDir) selection.
-    val benchScale: Option[Int] = sys.env.get("SPARK_GRAFT_BENCH_SCALE")
-      .map(t => t.trim.toIntOption.filter(_ > 1).getOrElse(sys.error(
-        s"SPARK_GRAFT_BENCH_SCALE must be an int > 1, got '$t'")))
+    val benchScale = Measure.envCount("SPARK_GRAFT_BENCH_SCALE", atLeast = 2)
     // Session-recycle cadence. The sf0.1 sweep recycles every 25 entries
     // (bounds session-state growth without paying 100+ session opens).
     // SCALE MODE recycles before EVERY entry — the streaming sweep's
@@ -90,7 +60,7 @@ object Bench {
     // 10x (round 14): j13d_range_join_sweep runs 247.6s when 21 entries
     // deep in a shared session vs 97.5s on a fresh one — 2.6x of pure
     // neighbor-state cost, invisible to the 1s calibration scan.
-    val chunk = sys.env.get("SPARK_GRAFT_CHUNK").map(_.toInt)
+    val chunk = Measure.envCount("SPARK_GRAFT_CHUNK")
       .getOrElse(if (benchScale.nonEmpty) 1 else 25)
     // Per-entry fresh-session recycling closed only PART of that gap:
     // j13b recovered (209 s shared-session → 86.6 s per-entry-session,
@@ -113,10 +83,9 @@ object Bench {
     }
     val settleMs = sys.env.getOrElse("SPARK_GRAFT_SETTLE_MS", "250").toLong
     // streaming entries run on the RocksDB state store (the 100 TB
-    // deployment shape: per-key state off-heap, changelog checkpointing
-    // instead of full-snapshot uploads); "hdfs" opts back into the
-    // default in-memory/HDFS-backed provider for comparison runs
-    val stateStore = sys.env.getOrElse("SPARK_GRAFT_STATE_STORE", "rocksdb")
+    // deployment shape; Measure.session has the per-setting rationale);
+    // "hdfs" opts back into the default provider for comparison runs
+    val stateStore = Measure.stateStore
     // State partitions for the streaming replays — a DIFFERENT knob from
     // the batch sweep's shuffle partitions, because state partitioning is
     // a per-query deployment decision sized to STATE VOLUME, not core
@@ -149,9 +118,7 @@ object Bench {
     // validated at startup like partsProbeValues: the value is
     // interpolated unquoted into both JSON artifacts, so a malformed
     // env var must fail HERE, not corrupt the lines after a full sweep
-    val streamParts: Int = sys.env.get("SPARK_GRAFT_STREAM_PARTS")
-      .map(t => t.trim.toIntOption.filter(_ > 0).getOrElse(sys.error(
-        s"SPARK_GRAFT_STREAM_PARTS must be a positive int, got '$t'")))
+    val streamParts = Measure.envCount("SPARK_GRAFT_STREAM_PARTS")
       .getOrElse(deploymentStreamParts)
     // State-partition sensitivity probe values (detail-file only; see the
     // probe block after the streaming sweep). Default "16": one extra e4
@@ -172,45 +139,10 @@ object Bench {
         }
 
     var spark: SparkSession = null
-    var metrics: MetricsListener = null
+    var metrics: Measure.TaskMetrics = null
     def openSession(): Unit = {
-      spark = SparkSession.builder()
-        .master(s"local[$cpus]")
-        .config("spark.sql.extensions", classOf[graft.expr.catalyst.GraftExtensions].getName)
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-      spark.sparkContext.setLogLevel("ERROR")
-      if (stateStore == "rocksdb") {
-        spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-          "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-        // measurement-only override (default = the deployment shape):
-        // SPARK_GRAFT_CHANGELOG=false reverts to full-snapshot-upload
-        // commits — the e6 lever-table axis (docs/STREAM_ATTRIBUTION.md
-        // round 17); levers Bench does NOT set explicitly
-        // (minDeltasForSnapshot, compactOnCommit) ride run_main.sh's
-        // SPARK_GRAFT_JVM_OPTS -D route instead of code knobs
-        spark.conf.set(
-          "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled",
-          sys.env.getOrElse("SPARK_GRAFT_CHANGELOG", "true"))
-        // every put otherwise pays a read-modify of the row counter —
-        // pure overhead for throughput benchmarking (the count is a
-        // progress-metrics nicety, not a correctness input)
-        spark.conf.set(
-          "spark.sql.streaming.stateStore.rocksdb.trackTotalNumberOfRows",
-          "false")
-        // one capped block cache shared across ALL store instances on
-        // the executor: without it each of the N state partitions keeps
-        // its own unbounded native memtable/cache, the classic
-        // many-partition executor OOM at cluster scale — benching the
-        // bounded shape prices what a deployment would actually run
-        spark.conf.set(
-          "spark.sql.streaming.stateStore.rocksdb.boundedMemoryUsage", "true")
-      }
-      metrics = new MetricsListener
-      spark.sparkContext.addSparkListener(metrics)
+      spark = Measure.session(cpus, cpus)
+      metrics = Measure.listen(spark)
     }
     def recycleSession(): Unit = {
       spark.stop()
@@ -220,39 +152,9 @@ object Bench {
     }
     openSession()
 
-    // Caches/persists created inside an operator (LSH shingle sets, the
-    // QP base frame) are dropped after every materialization: 100+
-    // queries share this one driver, and leaked blocks would both skew
-    // later timings (eviction churn) and hide each query's real
-    // first-run cost behind a neighbor's cache. Eager localCheckpoints
-    // register persistent RDDs rather than cacheManager entries, so both
-    // stores are cleared — waiting for driver GC + ContextCleaner would
-    // leave GB-scale blocks in storage memory across timed queries.
-    // conf restore: a query may apply an operator sizing rule to the
-    // session (RangeJoin.sizeSweepFold) — it must not re-plan neighbors
     def materialize(name: String, dir: String): Unit =
-      graft.tools.SessionConf.restoring(spark) {
-        try SparkEntry.queries(name)(spark, dir).write.format("noop").mode("overwrite").save()
-        finally {
-          spark.sharedState.cacheManager.clearCache()
-          spark.sparkContext.getPersistentRDDs.values
-            .foreach(_.unpersist(blocking = false))
-        }
-      }
-
-    // between timed regions only — never inside one: the GC is what lets
-    // ContextCleaner reclaim the shuffle files/broadcasts the previous
-    // query abandoned, so a later query does not pay its neighbor's
-    // cleanup; the sleep lets cleanup and listener delivery drain
-    def settle(): Unit = { System.gc(); Thread.sleep(settleMs) }
-    // listener events are delivered off-thread: block until the bus is
-    // actually empty (the drain Spark's own tests use) so per-rep metric
-    // deltas cannot absorb a neighbor rep's stragglers; only a wedged
-    // queue (timeout) falls back to the old best-effort sleep
-    def drainMetrics(): Unit =
-      if (!org.apache.spark.graftbench.ListenerDrain.drain(
-          spark.sparkContext, 5000L))
-        Thread.sleep(100)
+      Measure.materialize(spark)(SparkEntry.queries(name)(spark, dir))
+    def settle(): Unit = Measure.settle(settleMs)
 
     val names = SparkEntry.queries.keys.toSeq.sorted
       .filter(n => only.forall(_.contains(n)))
@@ -296,12 +198,8 @@ object Bench {
     // per-query times by the calibration pair to factor out machine load
     // (the r2 driver bench showed unchanged trivial queries 3-7x slower —
     // pure contention, indistinguishable from regressions without this).
-    def timeIt(f: => Unit): Double = {
-      val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
-    }
     val calibName = "s1_scan_project"
-    val calibStart =
-      try timeIt(materialize(calibName, sfDir)) catch { case _: Throwable => -1.0 }
+    val calibStart = Measure.timed(materialize(calibName, sfDir))
     // scale mode's per-entry fresh-session protocol (see `chunk`) must
     // cover the FIRST entry too — without this it alone inherits the
     // warmup+scaled-dir-build session
@@ -344,25 +242,11 @@ object Bench {
       */
     def timedReps(name: String)(run: () => Unit): (String, Double) = {
       var lastErr: String = null
-      def oneRep(): (Double, Double, Double, Double) = {
-        val before = metrics.snap()
-        metrics.resetPeak()
-        val t0 = System.nanoTime()
-        val ok =
-          try { run(); true }
-          catch {
-            case e: Throwable =>
-              System.err.println(s"[bench] $name FAILED: $e")
-              e.printStackTrace()
-              lastErr = jsonSafe(e)
-              false
-          }
-        val sec = if (ok) (System.nanoTime() - t0) / 1e9 else -1.0
-        drainMetrics()
-        val after = metrics.snap()
-        (sec, (after._1 - before._1) / 1e6, (after._2 - before._2) / 1e6,
-          metrics.peak() / 1e6)
-      }
+      def oneRep(): Measure.Rep = Measure.rep(metrics, { e =>
+        System.err.println(s"[bench] $name FAILED: $e")
+        e.printStackTrace()
+        lastErr = jsonSafe(e)
+      })(run())
       val first = (1 to reps).map(_ => oneRep())
       // exactly the noisyRepCount rule: run the extra rep iff the min
       // would be counted UNCONFIRMED as it stands. The old max/min > 2
@@ -370,26 +254,25 @@ object Bench {
       // min (e.g. [1.0, 1.1, 5.0] under REPS=3), paying a re-run that
       // could not change the noisy_reps outcome.
       val outcomes =
-        if (minUnconfirmed(first.map(_._1))) {
+        if (minUnconfirmed(first.map(_.sec))) {
           settle() // the extra rep must not inherit the spike's debris
           first :+ oneRep()
         } else first
       if (reps > 1) System.err.println(
-        s"[bench] $name reps: ${outcomes.map(o => f"${o._1}%.3f").mkString(", ")}")
-      repTimes(name) = outcomes.map(_._1)
+        s"[bench] $name reps: ${outcomes.map(o => f"${o.sec}%.3f").mkString(", ")}")
+      repTimes(name) = outcomes.map(_.sec)
       // min over SUCCESSFUL reps — a query that failed one rep but
       // succeeded on another has a real time and is NOT an error (the
       // transient-contention case REPS>=2 exists to tolerate); errors and
       // the -1 sentinel are reserved for every-rep failures so exit(2)
       // means a genuinely broken query, not a flaky rep
-      val succ = outcomes.filter(_._1 >= 0)
-      if (succ.isEmpty) {
-        if (lastErr != null) errors(name) = lastErr
-        name -> -1.0
-      } else {
-        val best = succ.minBy(_._1)
-        taskMetrics(name) = (best._2, best._3, best._4)
-        name -> best._1
+      outcomes.filter(_.sec >= 0).minByOption(_.sec) match {
+        case None =>
+          if (lastErr != null) errors(name) = lastErr
+          name -> -1.0
+        case Some(best) =>
+          taskMetrics(name) = (best.shuffleMb, best.spillMb, best.peakTaskMemMb)
+          name -> best.sec
       }
     }
 
@@ -413,9 +296,7 @@ object Bench {
       // setup (file listing, first-job startup) and read as a phantom
       // mid-sweep contention window
       if (i > 0 && i % calibEvery == 0) {
-        val c = try timeIt(materialize(calibName, sfDir))
-                catch { case _: Throwable => -1.0 }
-        midCalib += c
+        midCalib += Measure.timed(materialize(calibName, sfDir))
         settle()
       }
       if (i > 0 && i % chunk == 0) recycleSession()
@@ -461,8 +342,7 @@ object Bench {
     val streamMetrics =
       scala.collection.mutable.LinkedHashMap[String, Vector[StreamRepMetrics]]()
     def progressOf(
-        q: org.apache.spark.sql.streaming.StreamingQuery): StreamRepMetrics = {
-      val ps = q.recentProgress // retains >= our ~20 batches by default
+        ps: Array[org.apache.spark.sql.streaming.StreamingQueryProgress]): StreamRepMetrics = {
       def dur(p: org.apache.spark.sql.streaming.StreamingQueryProgress,
           k: String): Long =
         Option(p.durationMs.get(k)).map(_.longValue).getOrElse(0L)
@@ -475,96 +355,27 @@ object Bench {
           .map(s => Option(s.customMetrics.get("rocksdbCommitFileSyncLatencyMs"))
             .map(_.longValue).getOrElse(0L)).sum)
     }
-    // appended ONLY after a rep's try/finally fully completed: if
-    // q.stop() or checkpoint cleanup throws, timedReps records the rep
-    // as failed (-1), and an already-appended metrics entry would break
-    // the "i-th metrics entry = i-th successful rep" positional
-    // invariant streamMetricsJson's min-rep selection depends on
-    def recordRep(name: String, m: StreamRepMetrics): Unit =
-      streamMetrics(name) = streamMetrics.getOrElse(name, Vector.empty) :+ m
+    // appended ONLY after a replay fully completed, stop and checkpoint
+    // cleanup included (Measure.replay throws otherwise): timedReps then
+    // records the rep as failed (-1), and an already-appended metrics
+    // entry would break the "i-th metrics entry = i-th successful rep"
+    // positional invariant streamMetricsJson's min-rep selection depends on
+    def recordRep(name: String, r: Measure.Replay): Unit =
+      streamMetrics(name) =
+        streamMetrics.getOrElse(name, Vector.empty) :+ progressOf(r.progress)
 
     // Streaming wall-clock entries — StreamOps is batch-parity
     // spec-verified for correctness; these time it end-to-end. The sf
     // input table is replayed as a bounded MemoryStream in ~10 REAL
-    // micro-batches (each chunk drained before the next is added;
-    // watermarked operators trigger a second, no-new-data batch per
-    // chunk that advances the watermark and evicts state — it pays the
-    // full commit protocol and is part of the measurement) through
-    // keyed-state operators writing to the noop sink — so per-batch
-    // state-store load/commit and watermark advancement are inside the
-    // measurement, on the RocksDB provider by default (see `stateStore`
-    // above). Input collect happens outside the clock.
-    def replay[T](name: String, rows: IndexedSeq[T],
-        mk: Dataset[T] => Dataset[_], chunks: Int = 10)(
-        implicit enc: Encoder[T]): Unit = {
-      implicit val sc = spark.sqlContext
-      val in = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[T]
-      val ckpt = java.nio.file.Files.createTempDirectory("graft_bench_ckpt")
-      val q = mk(in.toDS()).writeStream.format("noop")
-        .option("checkpointLocation", ckpt.toString)
-        .outputMode("append").start()
-      var snapped: StreamRepMetrics = null
-      try {
-        // feed-then-drain per chunk: adding everything before start()
-        // would collapse the replay into ONE micro-batch and skip the
-        // per-batch state-store load/commit and watermark advancement
-        // this entry exists to measure
-        rows.grouped(math.max(1, rows.length / chunks))
-          .foreach { b => in.addData(b); q.processAllAvailable() }
-        snapped = progressOf(q)
-      } finally {
-        q.stop()
-        def rm(f: java.io.File): Unit = {
-          Option(f.listFiles).foreach(_.foreach(rm)); f.delete(); ()
-        }
-        rm(ckpt.toFile) // a rep must not leak its state-store files
-      }
-      // reached only when BOTH try and finally completed: the rep is the
-      // same "success" timedReps records, keeping metrics positional
-      if (snapped != null) recordRep(name, snapped)
-    }
-    // two-input replay for stream-stream joins: both sides advance in
-    // lockstep (a left chunk + a right chunk per micro-batch drain), so
-    // both watermarks move together and join-state expiry — the thing a
-    // stream-stream interval join exists to bound — happens inside the
-    // measurement instead of buffering one whole side
-    def replay2[A, B](name: String, lRows: IndexedSeq[A], rRows: IndexedSeq[B],
-        mk: (Dataset[A], Dataset[B]) => org.apache.spark.sql.DataFrame)(
-        implicit ea: Encoder[A], eb: Encoder[B]): Unit = {
-      implicit val sc = spark.sqlContext
-      val li = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[A]
-      val ri = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[B]
-      val ckpt = java.nio.file.Files.createTempDirectory("graft_bench_ckpt")
-      val q = mk(li.toDS(), ri.toDS()).writeStream.format("noop")
-        .option("checkpointLocation", ckpt.toString)
-        .outputMode("append").start()
-      var snapped: StreamRepMetrics = null
-      try {
-        // equal lengths are a hard precondition, not a convenience: if one
-        // side exhausted early its watermark would stop advancing, and
-        // under min-of-watermarks expiry the OTHER side's join state would
-        // stop expiring for the tail of the run — silently benching
-        // unbounded-state behavior
-        require(lRows.length == rRows.length,
-          s"replay2 drives both watermarks in lockstep; got ${lRows.length} vs ${rRows.length}")
-        val lc = lRows.grouped(math.max(1, lRows.length / 10)).toSeq
-        val rc = rRows.grouped(math.max(1, rRows.length / 10)).toSeq
-        lc.zip(rc).foreach {
-          case (lb, rb) =>
-            val _ = li.addData(lb)
-            val __ = ri.addData(rb)
-            q.processAllAvailable()
-        }
-        snapped = progressOf(q)
-      } finally {
-        q.stop()
-        def rm(f: java.io.File): Unit = {
-          Option(f.listFiles).foreach(_.foreach(rm)); f.delete(); ()
-        }
-        rm(ckpt.toFile)
-      }
-      if (snapped != null) recordRep(name, snapped)
-    }
+    // micro-batches through keyed-state operators writing to the noop
+    // sink ([[Measure.replay]]), so per-batch state-store load/commit and
+    // watermark advancement are inside the measurement, on the RocksDB
+    // provider by default (see `stateStore` above); e6 feeds its two
+    // inputs in lockstep ([[Measure.replay2]]). Input collect happens
+    // outside the clock.
+    def replay[T: Encoder](name: String, rows: IndexedSeq[T],
+        mk: Dataset[T] => Dataset[_], chunks: Int = 10): Unit =
+      recordRep(name, Measure.replay(spark, rows, chunks)(mk))
     // replay inputs and e6 join parameters live in StreamBenchShapes —
     // the ONE definition site shared with tools.StreamProbe, so the
     // probe's per-batch attribution provably describes the query this
@@ -574,15 +385,8 @@ object Bench {
       graft.streaming.StreamBenchShapes.loadEvents(spark, sfDir)
     lazy val docRows: IndexedSeq[graft.streaming.StreamOps.Doc] =
       graft.streaming.StreamBenchShapes.loadDocs(spark, sfDir)
-    implicit val eventEnc: Encoder[graft.streaming.StreamOps.Event] =
-      Encoders.product[graft.streaming.StreamOps.Event]
-    implicit val docEnc: Encoder[graft.streaming.StreamOps.Doc] =
-      Encoders.product[graft.streaming.StreamOps.Doc]
-    implicit val clickEnc: Encoder[(Long, java.sql.Timestamp)] =
-      Encoders.tuple(Encoders.scalaLong, Encoders.TIMESTAMP)
-    implicit val buyEnc: Encoder[(Long, java.sql.Timestamp, Double)] =
-      Encoders.tuple(Encoders.scalaLong, Encoders.TIMESTAMP,
-        Encoders.scalaDouble)
+    val rollup = (ds: Dataset[graft.streaming.StreamOps.Event]) =>
+      graft.streaming.StreamOps.hourlyRollup(ds.toDF())
     lazy val clickRows: IndexedSeq[(Long, java.sql.Timestamp)] =
       graft.streaming.StreamBenchShapes.clicksOf(eventRows)
     lazy val buyRows: IndexedSeq[(Long, java.sql.Timestamp, Double)] =
@@ -606,10 +410,7 @@ object Bench {
     // fixed compute; 10 chunks would measure the same thing at 3x the
     // sweep cost (the probe runs once per entry + a bookend)
     def streamCalibRun(): Double =
-      try timeIt(replay("stream_calib", streamCalibRows,
-        (ds: Dataset[graft.streaming.StreamOps.Event]) =>
-          graft.streaming.StreamOps.hourlyRollup(ds.toDF()), chunks = 3))
-      catch { case _: Throwable => -1.0 }
+      Measure.timed(replay("stream_calib", streamCalibRows, rollup, chunks = 3))
 
     val streamDefs: Seq[(String, () => Unit)] = Seq(
       ("e3_stream_sessionize",
@@ -617,18 +418,15 @@ object Bench {
           (ds: Dataset[graft.streaming.StreamOps.Event]) =>
             graft.streaming.StreamOps.sessionize(ds))),
       ("e4_stream_rollup",
-        () => replay("e4_stream_rollup", eventRows,
-          (ds: Dataset[graft.streaming.StreamOps.Event]) =>
-            graft.streaming.StreamOps.hourlyRollup(ds.toDF()))),
+        () => replay("e4_stream_rollup", eventRows, rollup)),
       ("e5_stream_neardedup",
         () => replay("e5_stream_neardedup", docRows,
           (ds: Dataset[graft.streaming.StreamOps.Doc]) =>
             graft.streaming.StreamOps.streamingNearDedup(ds))),
       ("e6_stream_interval_join",
-        () => replay2("e6_stream_interval_join", clickRows, buyRows,
-          (clicks: Dataset[(Long, java.sql.Timestamp)],
-           buys: Dataset[(Long, java.sql.Timestamp, Double)]) =>
-            graft.streaming.StreamBenchShapes.intervalJoinQuery(clicks, buys)))
+        () => recordRep("e6_stream_interval_join",
+          Measure.replay2(spark, clickRows, buyRows)(
+            graft.streaming.StreamBenchShapes.intervalJoinQuery)))
     ).filter { case (n, _) =>
       // scale mode sweeps the batch heavy family only — the streaming
       // scale axes live in StreamScaleProbe, and the scaled scratch
@@ -638,8 +436,8 @@ object Bench {
     // the end calibration probe bookends the BATCH sweep — taken before
     // the streaming section so RocksDB native state from the replays
     // cannot masquerade as batch-sweep drift in the start/end pair
-    val calibEnd =
-      try timeIt(materialize(calibName, sfDir)) catch { case _: Throwable => -1.0 }
+    val calibEnd = Measure.timed(materialize(calibName, sfDir))
+    val calibration = Calibration(calibName, calibStart, midCalib.toSeq, calibEnd)
 
     // QUIET-WINDOW band gate (round 20, mechanizing the r19 rule that
     // lived in the d9 band comment): some bands carry a hi that exists
@@ -653,10 +451,7 @@ object Bench {
     // gate, and a value still over the quiet hi lands in
     // `band_exceeded` — never silent.
     val quietRatio: Option[Double] =
-      if (bandGateEnabled) {
-        val m = warmCalibMean(calibStart, midCalib.toSeq, calibEnd)
-        if (m > 0 && isNominalSf(sfDir)) Some(m / calibNominalSec) else None
-      } else None
+      if (bandGateEnabled) calibration.ratio(sfDir) else None
     val gatedResults = results.map { case (name, v) =>
       if (quietRatio.exists(r => sf01QuietExceeded(name, v, r)) &&
           !jvmIsolated.contains(name)) {
@@ -763,10 +558,7 @@ object Bench {
             spark.conf.set("spark.sql.shuffle.partitions", p)
             val _ = eventRows // collect outside the timed region
             settle()
-            try timeIt(replay(s"stream_parts_probe_$p", eventRows,
-              (ds: Dataset[graft.streaming.StreamOps.Event]) =>
-                graft.streaming.StreamOps.hourlyRollup(ds.toDF())))
-            catch { case _: Throwable => -1.0 }
+            Measure.timed(replay(s"stream_parts_probe_$p", eventRows, rollup))
           }
           probeRepTimes(s"stream_parts_probe_$p") = times
           System.err.println(
@@ -795,38 +587,15 @@ object Bench {
     // judge dividing by 2.13 would over-correct by ~50%, manufacturing
     // phantom improvements. start_sec stays in the artifact as the
     // separate cold-start datum.
-    val calibMean = warmCalibMean(calibStart, midCalib.toSeq, calibEnd)
-    val calibRatio: Option[Double] =
-      if (calibMean > 0 && isNominalSf(sfDir)) Some(calibMean / calibNominalSec)
-      else None
+    val calibRatio = calibration.ratio(sfDir)
 
     val all = gatedResults ++ streamResults
-    val qs = all
-      .map { case (k, v) => "\"" + k + "\":" + f"$v%.3f" }
-      .mkString("{", ",", "}")
-    val errJson = errors.map { case (k, v) => "\"" + k + "\":\"" + v + "\"" }
-      .mkString("{", ",", "}")
     // batch and streaming totals are SEPARATE fields: the streaming
     // replays measure state-store throughput, not query cost, and
     // folding them into `value` (as r5 did) breaks round-over-round
     // total comparisons. `value` is the batch sweep alone.
     val total = gatedResults.map(_._2).filter(_ >= 0).sum
     val streamTotal = streamResults.map(_._2).filter(_ >= 0).sum
-    val errField = if (errors.nonEmpty) s""","errors":$errJson""" else ""
-    val midJson = midCalib.map(c => f"$c%.3f").mkString("[", ",", "]")
-    val ratioJson =
-      calibRatio.map(r => s""","ratio_vs_nominal":${f"$r%.2f"},"nominal_sec":$calibNominalSec""").getOrElse("")
-    // the field is NAMED warm_mean_sec because its definition changed in
-    // r09 (mean of warm probes only; previously all probes incl. the cold
-    // start) — the rename is the schema marker that stops a judge from
-    // comparing it like-for-like against pre-r09 detail files' mean_sec
-    val calib = s""","calibration":{"query":"$calibName","start_sec":${f"$calibStart%.3f"},"mid_sec":$midJson,"end_sec":${f"$calibEnd%.3f"},"warm_mean_sec":${f"$calibMean%.3f"}$ratioJson}"""
-    val tm = taskMetrics
-      .map { case (k, (sh, sp, pk)) =>
-        "\"" + k + "\":{\"shuffle_mb\":" + f"$sh%.1f" + ",\"spill_mb\":" + f"$sp%.1f" +
-          ",\"peak_task_mem_mb\":" + f"$pk%.1f" + "}"
-      }
-      .mkString("{", ",", "}")
 
     // ---- artifact emission, split across two surfaces ----
     // The driver keeps only the LAST ~2000 chars of stdout and parses a
@@ -845,11 +614,6 @@ object Bench {
     //     many sub-tail entries were elided; `detail` points at the full
     //     file.
     val detailFile = sys.env.getOrElse("SPARK_GRAFT_DETAIL_OUT", "BENCH_DETAIL.json")
-    val repsJson = repTimes
-      .map { case (k, vs) =>
-        "\"" + k + "\":" + vs.map(v => f"$v%.3f").mkString("[", ",", "]")
-      }
-      .mkString("{", ",", "}")
     // `parts` keeps the min-of-reps contract the sweep uses; `rep_times`
     // carries every rep so a judge can see whether a sensitivity point is
     // replicated or one contended measurement
@@ -910,21 +674,10 @@ object Bench {
     val scaleField = scaleDetailField(benchScale, sfDir)
     val bandField = bandGateDetailJson(bandGateEnabled,
       jvmIsolated.toSeq, bandExceeded)
-    val fullLine =
-      s"""{"metric":"total","value":${f"$total%.3f"},"unit":"sec","queries":$qs,"reps":$repsJson,"stream_total":${f"$streamTotal%.3f"}$streamComputeField,"state_store":"$stateStore","stream_parts":$streamParts$streamCalibField,"task_metrics":$tm$calib$partsProbeJson$streamMetricsField$errField$scaleField$bandField,"sf":"$queryDir"}"""
-    try
-      java.nio.file.Files.write(java.nio.file.Paths.get(detailFile),
-        (fullLine + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    catch {
-      case e: Exception =>
-        System.err.println(s"[bench] could not write $detailFile: $e")
-    }
-    val calibCompact = {
-      val mid = if (midCalib.isEmpty) "" else f",${midCalib.max}%.2f"
-      s"[${f"$calibStart%.2f"}$mid,${f"$calibEnd%.2f"}]" // start, worst mid, end
-    }
-    println(compactArtifact(all, total, streamTotal, stateStore, calibCompact,
-      detailFile, errors.keys.toSeq, queryDir, calibMean, calibRatio,
+    writeDetail(detailFile,
+      s"""{"metric":"total","value":${f"$total%.3f"},"unit":"sec","queries":${secsJson(all)},"reps":${repsJson(repTimes)},"stream_total":${f"$streamTotal%.3f"}$streamComputeField,"state_store":"$stateStore","stream_parts":$streamParts$streamCalibField,"task_metrics":${taskMetricsJson(taskMetrics)}${calibration.detailJson(calibRatio)}$partsProbeJson$streamMetricsField${errorsField(errors)}$scaleField$bandField,"sf":"$queryDir"}""")
+    println(compactArtifact(all, total, streamTotal, stateStore, calibration.compact,
+      detailFile, errors.keys.toSeq, queryDir, calibration.mean, calibRatio,
       noisyRepCount(repTimes.values), streamComputeTotal, streamComputeCov,
       streamParts, streamCalibMeanSec(streamCalibSeries.toSeq), benchScale,
       jvmIsolated = jvmIsolated.toSeq, bandExceeded = bandExceeded))
@@ -1551,39 +1304,10 @@ object Bench {
       .filter(graft.tools.ScaleProbe.tablesFor.contains)
     val detailFile =
       sys.env.getOrElse("SPARK_GRAFT_DETAIL_OUT", "BENCH_DETAIL.json")
-    val stateStore = sys.env.getOrElse("SPARK_GRAFT_STATE_STORE", "rocksdb")
-    val childTimeoutMin =
-      sys.env.getOrElse("SPARK_GRAFT_CHILD_TIMEOUT_MIN", "45").toLong
+    val stateStore = Measure.stateStore
+    val childTimeoutMin = Measure.envCount("SPARK_GRAFT_CHILD_TIMEOUT_MIN").getOrElse(45)
 
-    def open(): SparkSession = {
-      val s = SparkSession.builder()
-        .master(s"local[$cpus]")
-        .config("spark.sql.extensions",
-          classOf[graft.expr.catalyst.GraftExtensions].getName)
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-      s.sparkContext.setLogLevel("ERROR")
-      s
-    }
     val calibName = "s1_scan_project"
-    def mat(s: SparkSession, dir: String): Unit =
-      graft.tools.SessionConf.restoring(s) {
-        try SparkEntry.queries(calibName)(s, dir)
-          .write.format("noop").mode("overwrite").save()
-        finally s.sharedState.cacheManager.clearCache()
-      }
-    // same shape as the sweep's probes: warm the calib plan on sf0.001
-    // (untimed), then time it on the BASE sf — the nominal is only
-    // meaningful there
-    def calibRun(s: SparkSession): Double =
-      try {
-        mat(s, "/root/testdata/sf0.001")
-        val t0 = System.nanoTime(); mat(s, sfDir)
-        (System.nanoTime() - t0) / 1e9
-      } catch { case _: Throwable => -1.0 }
 
     // scaled corpus built/validated ONCE; children hit the versioned
     // marker and reuse. The parent session stays OPEN across the whole
@@ -1594,14 +1318,21 @@ object Bench {
     // merge attempt used each child's own cold start probe as a mid and
     // read calib_ratio 1.91 against warm bracketing probes of 1.2-1.7,
     // which would have over-normalized every query in the artifact).
-    val spark = open()
+    val spark = Measure.session(cpus, cpus)
+    def calibOn(dir: String): Unit =
+      Measure.materialize(spark)(SparkEntry.queries(calibName)(spark, dir))
     val tables =
       sweepNames.flatMap(graft.tools.ScaleProbe.tablesFor).distinct
     graft.tools.ScaleProbe.assertStrides(spark, sfDir, tables)
     val scaledDir = graft.tools.ScaleProbe.ensureScaled(spark, sfDir, scale,
       sys.env.getOrElse("SPARK_GRAFT_SCALE_OUT", "/tmp/graft_scale"),
       tables, dateShift = false)
-    val calibStart = calibRun(spark)
+    // same shape as the sweep's probes: warm the calib plan on sf0.001
+    // (untimed), then time it on the BASE sf — the nominal is only
+    // meaningful there
+    val calibStart =
+      if (Measure.timed(calibOn("/root/testdata/sf0.001")) < 0) -1.0
+      else Measure.timed(calibOn(sfDir))
 
     val tmpDir = java.nio.file.Files.createTempDirectory("graft_scale_iso")
 
@@ -1612,11 +1343,7 @@ object Bench {
     // warm probe on the parent's long-lived session — the mid series:
     // one between every pair of children, a per-entry host-state trace
     // with the SAME warm semantics as the nominal
-    def midProbe(): Double =
-      try {
-        val t0 = System.nanoTime(); mat(spark, sfDir)
-        (System.nanoTime() - t0) / 1e9
-      } catch { case _: Throwable => -1.0 }
+    def midProbe(): Double = Measure.timed(calibOn(sfDir))
 
     val midCalibBuf = scala.collection.mutable.ArrayBuffer[Double]()
     val results = sweepNames.zipWithIndex.map { case (name, i) =>
@@ -1635,49 +1362,77 @@ object Bench {
     val errors = results.collect { case (n, r) if r.sec < 0 =>
       n -> r.error.getOrElse("unknown child failure")
     }
-    val midCalib = midCalibBuf.toSeq.filter(_ >= 0)
-    val calibMean = warmCalibMean(calibStart, midCalib, calibEnd)
-    val calibRatio: Option[Double] =
-      if (calibMean > 0 && isNominalSf(sfDir)) Some(calibMean / calibNominalSec)
-      else None
-    val noisyReps = noisyRepCount(results.map(_._2.reps))
+    val calibration =
+      Calibration(calibName, calibStart, midCalibBuf.toSeq.filter(_ >= 0), calibEnd)
+    val calibRatio = calibration.ratio(sfDir)
+    val tm = results.collect { case (k, r) if r.metrics.nonEmpty => k -> r.metrics.get }
 
-    val qs = all.map { case (k, v) => "\"" + k + "\":" + f"$v%.3f" }
-      .mkString("{", ",", "}")
-    val repsJson = results.map { case (k, r) =>
-      "\"" + k + "\":" + r.reps.map(v => f"$v%.3f").mkString("[", ",", "]")
-    }.mkString("{", ",", "}")
-    val tm = results.collect { case (k, r) if r.metrics.nonEmpty =>
-      val (sh, sp, pk) = r.metrics.get
-      "\"" + k + "\":{\"shuffle_mb\":" + f"$sh%.1f" + ",\"spill_mb\":" +
-        f"$sp%.1f" + ",\"peak_task_mem_mb\":" + f"$pk%.1f" + "}"
-    }.mkString("{", ",", "}")
-    val errJson = errors.map { case (k, v) => "\"" + k + "\":\"" + v + "\"" }
-      .mkString("{", ",", "}")
-    val errField = if (errors.nonEmpty) s""","errors":$errJson""" else ""
-    val midJson = midCalib.map(c => f"$c%.3f").mkString("[", ",", "]")
-    val ratioJson = calibRatio.map(r =>
-      s""","ratio_vs_nominal":${f"$r%.2f"},"nominal_sec":$calibNominalSec""")
-      .getOrElse("")
-    val calib = s""","calibration":{"query":"$calibName","start_sec":${f"$calibStart%.3f"},"mid_sec":$midJson,"end_sec":${f"$calibEnd%.3f"},"warm_mean_sec":${f"$calibMean%.3f"}$ratioJson}"""
-    val fullLine =
-      s"""{"metric":"total","value":${f"$total%.3f"},"unit":"sec","queries":$qs,"reps":$repsJson,"stream_total":0.000,"state_store":"$stateStore","stream_parts":$deploymentStreamParts,"task_metrics":$tm$calib$errField${scaleDetailField(Some(scale), sfDir)}${scaleBandsJson(sweepNames)},"scale_isolation":"per_entry_jvm","sf":"$scaledDir"}"""
-    try
-      java.nio.file.Files.write(java.nio.file.Paths.get(detailFile),
-        (fullLine + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    catch {
-      case e: Exception =>
-        System.err.println(s"[bench] could not write $detailFile: $e")
-    }
-    val calibCompact = {
-      val mid = if (midCalib.isEmpty) "" else f",${midCalib.max}%.2f"
-      s"[${f"$calibStart%.2f"}$mid,${f"$calibEnd%.2f"}]"
-    }
-    println(compactArtifact(all, total, 0.0, stateStore, calibCompact,
-      detailFile, errors.map(_._1), scaledDir, calibMean, calibRatio,
-      noisyReps, -1.0, None, deploymentStreamParts, -1.0, Some(scale)))
+    writeDetail(detailFile,
+      s"""{"metric":"total","value":${f"$total%.3f"},"unit":"sec","queries":${secsJson(all)},"reps":${repsJson(results.map { case (k, r) => k -> r.reps })},"stream_total":0.000,"state_store":"$stateStore","stream_parts":$deploymentStreamParts,"task_metrics":${taskMetricsJson(tm)}${calibration.detailJson(calibRatio)}${errorsField(errors)}${scaleDetailField(Some(scale), sfDir)}${scaleBandsJson(sweepNames)},"scale_isolation":"per_entry_jvm","sf":"$scaledDir"}""")
+    println(compactArtifact(all, total, 0.0, stateStore, calibration.compact,
+      detailFile, errors.map(_._1), scaledDir, calibration.mean, calibRatio,
+      noisyRepCount(results.map(_._2.reps)), -1.0, None, deploymentStreamParts,
+      -1.0, Some(scale)))
     if (errors.nonEmpty) sys.exit(2)
   }
+
+  /** One run's calibration-probe series: the cold start probe, the warm
+    * probes taken during the run, and the end probe.
+    */
+  private final case class Calibration(query: String, start: Double,
+      mid: Seq[Double], end: Double) {
+    val mean: Double = warmCalibMean(start, mid, end)
+
+    /** calib_ratio — only at the nominal's scale factor. */
+    def ratio(sfDir: String): Option[Double] =
+      if (mean > 0 && isNominalSf(sfDir)) Some(mean / calibNominalSec) else None
+
+    /** The detail file's `calibration` field (leading comma). It is NAMED
+      * warm_mean_sec because its definition changed in r09 (mean of warm
+      * probes only; previously all probes incl. the cold start) — the
+      * rename is the schema marker that stops a judge from comparing it
+      * like-for-like against pre-r09 detail files' mean_sec.
+      */
+    def detailJson(ratio: Option[Double]): String = {
+      val ratioJson = ratio.map(r =>
+        s""","ratio_vs_nominal":${f"$r%.2f"},"nominal_sec":$calibNominalSec""").getOrElse("")
+      s""","calibration":{"query":"$query","start_sec":${f"$start%.3f"},"mid_sec":${mid.map(c => f"$c%.3f").mkString("[", ",", "]")},"end_sec":${f"$end%.3f"},"warm_mean_sec":${f"$mean%.3f"}$ratioJson}"""
+    }
+
+    /** The compact line's `calib`: [start, worst mid, end]. */
+    def compact: String = {
+      val worst = if (mid.isEmpty) "" else f",${mid.max}%.2f"
+      s"[${f"$start%.2f"}$worst,${f"$end%.2f"}]"
+    }
+  }
+
+  private def secsJson(xs: Iterable[(String, Double)]): String =
+    xs.map { case (k, v) => "\"" + k + "\":" + f"$v%.3f" }.mkString("{", ",", "}")
+
+  private def repsJson(xs: Iterable[(String, Seq[Double])]): String =
+    xs.map { case (k, vs) =>
+      "\"" + k + "\":" + vs.map(v => f"$v%.3f").mkString("[", ",", "]")
+    }.mkString("{", ",", "}")
+
+  private def taskMetricsJson(xs: Iterable[(String, (Double, Double, Double))]): String =
+    xs.map { case (k, (sh, sp, pk)) =>
+      "\"" + k + "\":{\"shuffle_mb\":" + f"$sh%.1f" + ",\"spill_mb\":" + f"$sp%.1f" +
+        ",\"peak_task_mem_mb\":" + f"$pk%.1f" + "}"
+    }.mkString("{", ",", "}")
+
+  /** The detail file's `errors` map (leading comma; empty without errors). */
+  private def errorsField(xs: Iterable[(String, String)]): String =
+    if (xs.isEmpty) ""
+    else xs.map { case (k, v) => "\"" + k + "\":\"" + v + "\"" }
+      .mkString(""","errors":{""", ",", "}")
+
+  private def writeDetail(file: String, line: String): Unit =
+    try
+      java.nio.file.Files.write(java.nio.file.Paths.get(file),
+        (line + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    catch {
+      case e: Exception => System.err.println(s"[bench] could not write $file: $e")
+    }
 
   private[graft] def compactArtifact(
       all: Seq[(String, Double)], total: Double, streamTotal: Double,

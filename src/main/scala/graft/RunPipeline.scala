@@ -2,12 +2,11 @@ package graft
 
 import java.time.LocalDate
 
-import org.apache.spark.sql.SparkSession
-
 import graft.catalog.Lake
 import graft.connect.FixtureBarSource
 import graft.pipeline.DailyPipeline
 import graft.stages.Variables
+import graft.tools.Measure
 
 /** CLI entry: run the full reference-shaped pipeline (backfill + one
   * incremental daily step) against fixture market data in a local lake.
@@ -22,15 +21,7 @@ object RunPipeline {
         args.lift(2).getOrElse("/root/testdata/sf0.001")); return
     }
     val root = args.headOption.getOrElse("/tmp/graft_lake")
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .config("spark.sql.extensions", classOf[graft.expr.catalyst.GraftExtensions].getName)
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .appName("graft-pipeline")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Measure.session(sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"), "32")
 
     val lake = new Lake(spark, root)
     val pipe = new DailyPipeline(spark, lake)
@@ -113,14 +104,7 @@ object RunPipeline {
     *   sbt "runMain graft.RunPipeline --corpus /tmp/graft_corpus /root/testdata/sf0.01"
     */
   private def runCorpus(root: String, sfDir: String): Unit = {
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .config("spark.sql.extensions", classOf[graft.expr.catalyst.GraftExtensions].getName)
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .appName("graft-corpus").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Measure.session(sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"), "32")
     import org.apache.spark.sql.functions.col
     val lake = new Lake(spark, root)
     val all = spark.read.parquet(s"$sfDir/documents.parquet")
@@ -148,28 +132,12 @@ object RunPipeline {
     *   sbt "runMain graft.RunPipeline --streaming /root/testdata/sf0.01"
     */
   private def runStreaming(sfDir: String): Unit = {
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.streaming.schemaInference", "false")
-      // production state-store shape, same as the Bench streaming
-      // entries: per-key state in RocksDB (off-heap, spill-free at large
-      // key cardinality) with changelog checkpointing (per-batch delta
-      // upload instead of full snapshots)
-      .config("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      .config(
-        "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled",
-        "true")
-      // one capped block cache shared across all store instances —
-      // unbounded per-partition native memory is the many-partition
-      // executor OOM at cluster scale
-      .config("spark.sql.streaming.stateStore.rocksdb.boundedMemoryUsage",
-        "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // production state-store shape, same as the Bench streaming entries
+    // (Measure.session); the sessions leg reads the RocksDB row total
+    val spark = Measure.session("8", "8", trackStateRows = true, extra = Map(
+      "spark.sql.streaming.schemaInference" -> "false",
+      "spark.sql.legacy.parquet.nanosAsLong" -> "true"))
     import org.apache.spark.sql.functions._
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     // file sources stream a DIRECTORY of arriving files
     val inDir = java.nio.file.Files.createTempDirectory("graft_stream")
     java.nio.file.Files.copy(

@@ -1,20 +1,18 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
+
+import graft.tools.{Measure, SessionConf}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
+    if (args.length != 2) {
+      System.err.println("usage: graft.Verify <sfDir> <outDir>")
+      sys.exit(2)
+    }
     val Array(sfDir, outDir) = args
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.extensions", classOf[graft.expr.catalyst.GraftExtensions].getName)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Measure.session(cpus, cpus)
     new java.io.File(outDir).mkdirs()
     // optional comma-separated subset for fast iteration (same knob as Bench)
     val subset = SparkEntry.querySubset(sys.env.get("SPARK_GRAFT_QUERIES"))
@@ -23,23 +21,15 @@ object Verify {
       case None     => SparkEntry.queries
     }
     selected.foreach { case (name, fn) =>
-      graft.tools.SessionConf.restoring(spark) {
+      SessionConf.restoring(spark) {
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
       // operator-internal persists must not accumulate across the 100+
-      // queries. Eager localCheckpoints (the repo's same-job multi-consumer
-      // rule) register persistent RDDs INVISIBLE to the cache manager, so
-      // both stores are cleared — clearCache() alone would leak every
-      // checkpointed frame (t8/t13 word explosions, LSH band keys, the QP
-      // base) for the rest of the sweep.
-      finally {
-        spark.sharedState.cacheManager.clearCache()
-        spark.sparkContext.getPersistentRDDs.values
-          .foreach(_.unpersist(blocking = false))
-      }
+      // queries (both the cache manager and localCheckpoint RDDs)
+      finally Measure.release(spark)
       }
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)

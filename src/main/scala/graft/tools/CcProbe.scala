@@ -204,7 +204,7 @@ object CcProbe {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val parts = sys.env.getOrElse("SPARK_GRAFT_SCALE_PARTS", cpus)
     val outRoot = sys.env.getOrElse("SPARK_GRAFT_CC_OUT", "/tmp/graft_cc")
-    val reps = sys.env.getOrElse("SPARK_GRAFT_CC_REPS", "2").toInt
+    val reps = Measure.envCount("SPARK_GRAFT_CC_REPS").getOrElse(2)
     def longs(env: String, dflt: String): Seq[Long] =
       sys.env.getOrElse(env, dflt).split(',').toSeq
         .map(_.trim).filter(_.nonEmpty).map(_.toLong)
@@ -241,17 +241,9 @@ object CcProbe {
     // strategies on REAL executor JVMs (socket exchanges,
     // executor-resident persist/localCheckpoint blocks, the label-map
     // broadcast crossing processes) — the shared probe contract lives
-    // in [[ProbeSession.withMasterEnv]].
-    val spark = ProbeSession.withMasterEnv(SparkSession.builder(), cpus)
-      .config("spark.sql.extensions", classOf[graft.expr.catalyst.GraftExtensions].getName)
-      .config("spark.sql.shuffle.partitions", parts)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    val metrics = new ScaleProbe.Metrics
-    spark.sparkContext.addSparkListener(metrics)
+    // in [[Measure.session]].
+    val spark = Measure.session(cpus, parts)
+    val metrics = Measure.listen(spark)
 
     // generation outside the timed region: each graph written once
     def ensure(tag: String, nodes: => DataFrame, edges: => DataFrame): String = {
@@ -264,10 +256,6 @@ object CcProbe {
         System.err.println(s"[cc] built $dir")
       }
       dir
-    }
-    def settle(): Unit = { System.gc(); Thread.sleep(250) }
-    def timeIt(f: => Unit): Double = {
-      val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
     }
     // the strategy under test: "local"/"dist" force canonicalize's two
     // branches via the edge budget; "star" is the alternating
@@ -292,17 +280,11 @@ object CcProbe {
     // one timed canonicalize run: read parquet -> canonicalize -> noop
     // sink; caches and checkpoint blocks dropped after (canonicalize
     // localCheckpoints the edge list; Bench's hygiene pattern)
+    def canonOf(dir: String, mode: String, maxIter: Int): DataFrame =
+      canon(spark.read.parquet(s"$dir/nodes.parquet"),
+        spark.read.parquet(s"$dir/edges.parquet"), mode, maxIter)
     def run(dir: String, mode: String, maxIter: Int): Unit =
-      try {
-        val nodes = spark.read.parquet(s"$dir/nodes.parquet")
-        val pairs = spark.read.parquet(s"$dir/edges.parquet")
-        canon(nodes, pairs, mode, maxIter)
-          .write.format("noop").mode("overwrite").save()
-      } finally {
-        spark.sharedState.cacheManager.clearCache()
-        spark.sparkContext.getPersistentRDDs.values
-          .foreach(_.unpersist(blocking = false))
-      }
+      Measure.materialize(spark)(canonOf(dir, mode, maxIter))
     // verify (untimed): labels must equal the closed-form component min.
     // A WRONG label fails the probe; a point that cannot COMPLETE (e.g.
     // the union-find label map outgrowing what a broadcast can carry) is
@@ -314,9 +296,7 @@ object CcProbe {
     final class LabelMismatch(msg: String) extends RuntimeException(msg)
     def check(dir: String, mode: String, maxIter: Int, expected: String): Boolean =
       try {
-        val nodes = spark.read.parquet(s"$dir/nodes.parquet")
-        val pairs = spark.read.parquet(s"$dir/edges.parquet")
-        val bad = canon(nodes, pairs, mode, maxIter)
+        val bad = canonOf(dir, mode, maxIter)
           .filter(col("canon_id") =!= expr(expected)).count()
         if (bad != 0L)
           throw new LabelMismatch(s"$dir ($mode): $bad labels disagree with closed form")
@@ -326,30 +306,11 @@ object CcProbe {
         case e: Throwable =>
           System.err.println(s"[cc] $dir ($mode) CANNOT RUN: " +
             e.toString.linesIterator.next()); false
-      } finally {
-        spark.sharedState.cacheManager.clearCache()
-        spark.sparkContext.getPersistentRDDs.values
-          .foreach(_.unpersist(blocking = false))
-      }
-    // (sec, shuffleMb, spillMb, peakTaskMemMb) of the min-time rep
-    def minOfReps(dir: String, mode: String, maxIter: Int): (Double, Double, Double, Double) = {
-      val ts = (1 to reps).map { _ =>
-        metrics.reset()
-        val t = try timeIt(run(dir, mode, maxIter))
-                catch { case e: Throwable =>
-                  System.err.println(s"[cc] $dir ($mode) FAILED: $e"); -1.0 }
-        org.apache.spark.graftbench.ListenerDrain.drain(spark.sparkContext, 5000)
-        val (sh, sp, pk) = metrics.snapMb()
-        settle(); (t, sh, sp, pk)
-      }
-      val ok = ts.filter(_._1 >= 0)
-      if (ok.isEmpty) (-1.0, -1.0, -1.0, -1.0) else ok.minBy(_._1)
-    }
-    def fmt(tag: String, label: String,
-        m: (Double, Double, Double, Double)): String = {
+      } finally Measure.release(spark)
+    def fmt(tag: String, label: String, m: Measure.Rep): String = {
       System.err.println(
-        f"[cc] $label -> ${m._1}%7.2fs  shuffle=${m._2}%8.1fMB spill=${m._3}%7.1fMB peakTask=${m._4}%6.1fMB")
-      f""""$tag":{"sec":${m._1}%.3f,"shuffle_mb":${m._2}%.1f,"spill_mb":${m._3}%.1f,"peak_task_mem_mb":${m._4}%.1f}"""
+        f"[cc] $label -> ${m.sec}%7.2fs  shuffle=${m.shuffleMb}%8.1fMB spill=${m.spillMb}%7.1fMB peakTask=${m.peakTaskMemMb}%6.1fMB")
+      f""""$tag":{"sec":${m.sec}%.3f,"shuffle_mb":${m.shuffleMb}%.1f,"spill_mb":${m.spillMb}%.1f,"peak_task_mem_mb":${m.peakTaskMemMb}%.1f}"""
     }
 
     // axis selection (SPARK_GRAFT_CC_AXES, comma list) so a single
@@ -361,12 +322,14 @@ object CcProbe {
     // warmup (not timed): smallest star graph through every strategy
     val warm = ensure("star_100k", starNodes(spark, 100000), starEdges(spark, 100000))
     Seq("dist", "local", "star", "hybrid", "hybrid_auto")
-      .foreach(m => run(warm, m, 25)); settle()
+      .foreach(m => run(warm, m, 25)); Measure.settle()
 
     def axisPoint(tag: String, dir: String, mode: String, maxIter: Int,
         expected: String): String = {
       val m = if (check(dir, mode, maxIter, expected))
-        minOfReps(dir, mode, maxIter) else (-1.0, -1.0, -1.0, -1.0)
+        Measure.minOfReps(reps, metrics,
+          e => System.err.println(s"[cc] $dir ($mode) FAILED: $e"))(run(dir, mode, maxIter))
+      else Measure.Rep.failed
       fmt(tag, s"$tag $mode", m)
     }
 

@@ -47,33 +47,6 @@ import org.apache.spark.sql.functions._
   */
 object ScaleProbe {
 
-  /** Bench's task-metric trio, probe-sized: cluster-wide shuffle-write
-    * and disk-spill sums plus the max single-task execution-memory
-    * high-water mark, snapshotted per rep behind a listener-bus drain.
-    * This is what turns "the super-linear top segment is the shared
-    * heap, not the plan" from an argument into a column of data: a
-    * memory-pressure segment shows spill/peak climbing with scale, a
-    * plan defect shows shuffle rows climbing super-linearly.
-    * Shared with [[CcProbe]] (tools-private, not part of any pipeline).
-    */
-  private[tools] final class Metrics extends org.apache.spark.scheduler.SparkListener {
-    private val shuffle = new java.util.concurrent.atomic.AtomicLong
-    private val spill = new java.util.concurrent.atomic.AtomicLong
-    private val peak = new java.util.concurrent.atomic.AtomicLong
-    override def onTaskEnd(
-        te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-      val m = te.taskMetrics
-      if (m != null) {
-        shuffle.addAndGet(m.shuffleWriteMetrics.bytesWritten)
-        spill.addAndGet(m.diskBytesSpilled)
-        peak.accumulateAndGet(m.peakExecutionMemory, Math.max(_, _))
-      }
-    }
-    def reset(): Unit = { shuffle.set(0); spill.set(0); peak.set(0) }
-    def snapMb(): (Double, Double, Double) =
-      (shuffle.get / 1e6, spill.get / 1e6, peak.get / 1e6)
-  }
-
   /** Tables the probed queries read, with their per-copy transform.
     * Key offsets use strides far above any sf0.1 key range.
     */
@@ -367,7 +340,7 @@ object ScaleProbe {
     java.util.Locale.setDefault(java.util.Locale.ROOT)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val reps = sys.env.getOrElse("SPARK_GRAFT_SCALE_REPS", "2").toInt
+    val reps = Measure.envCount("SPARK_GRAFT_SCALE_REPS").getOrElse(2)
     val outRoot = sys.env.getOrElse("SPARK_GRAFT_SCALE_OUT", "/tmp/graft_scale")
     val copies = sys.env.getOrElse("SPARK_GRAFT_SCALE_COPIES", "3,10")
       .split(',').toSeq.map(_.trim).filter(_.nonEmpty).map(_.toInt)
@@ -388,8 +361,8 @@ object ScaleProbe {
     // caveat-closing datum for "network costs are plan-asserted only").
     // The executor-env contract — explicit classpath/add-opens/memory,
     // the ABSOLUTE-classpath assertion, and the round-12
-    // SerializedLambda failure mode it guards — is shared with the
-    // other probes in [[ProbeSession.withMasterEnv]].
+    // SerializedLambda failure mode it guards — lives in
+    // [[Measure.session]].
     // SPARK_GRAFT_SCALE_PARTS decouples shuffle partitions from thread
     // count: at a FIXED partition count every shuffled partition grows
     // ∝ corpus, so per-task sort/agg memory grows with scale for ANY
@@ -403,70 +376,30 @@ object ScaleProbe {
     // more, smaller aggregate working sets sharing the one local heap —
     // the deployment lever for spill ONSET segments (q11's 100x point),
     // demonstrated rather than argued
-    val advisoryMb = sys.env.get("SPARK_GRAFT_ADVISORY_MB")
-      .map(t => t.trim.toIntOption.filter(_ > 0).getOrElse(sys.error(
-        s"SPARK_GRAFT_ADVISORY_MB must be a positive int, got '$t'")))
+    val advisoryMb = Measure.envCount("SPARK_GRAFT_ADVISORY_MB")
     // SPARK_GRAFT_MAX_PARTITION_MB shrinks INPUT splits — the map-side
     // twin of the two knobs above: a near-unique-key aggregate's partial
     // hash map buffers ~its input split's rows, so map-side spill is
     // cured by split size (at a deployment: executor count), not by
     // reduce partition count
-    val maxPartitionMb = sys.env.get("SPARK_GRAFT_MAX_PARTITION_MB")
-      .map(t => t.trim.toIntOption.filter(_ > 0).getOrElse(sys.error(
-        s"SPARK_GRAFT_MAX_PARTITION_MB must be a positive int, got '$t'")))
-    var builder = ProbeSession.withMasterEnv(SparkSession.builder(), cpus)
-      .config("spark.sql.extensions", classOf[graft.expr.catalyst.GraftExtensions].getName)
-      .config("spark.sql.shuffle.partitions", parts)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-    advisoryMb.foreach(mb => builder = builder
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", s"${mb}m"))
-    maxPartitionMb.foreach(mb => builder = builder
-      .config("spark.sql.files.maxPartitionBytes", s"${mb}m"))
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    val metrics = new Metrics
-    spark.sparkContext.addSparkListener(metrics)
+    val maxPartitionMb = Measure.envCount("SPARK_GRAFT_MAX_PARTITION_MB")
+    val spark = Measure.session(cpus, parts, extra = Seq(
+      "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> advisoryMb,
+      "spark.sql.files.maxPartitionBytes" -> maxPartitionMb)
+      .collect { case (k, Some(mb)) => k -> s"${mb}m" }.toMap)
+    // per-point shuffle/spill/peak-task telemetry turns "the super-linear
+    // top segment is the shared heap, not the plan" into data: a memory-
+    // pressure segment shows spill/peak climbing with scale, a plan
+    // defect shows shuffle climbing super-linearly
+    val metrics = Measure.listen(spark)
 
     assertStrides(spark, sfDir, neededTables)
     def scaledDir(n: Int): String = scaledDirName(outRoot, n, dateShift)
     copies.foreach(n =>
       ensureScaled(spark, sfDir, n, outRoot, neededTables, dateShift))
 
-    // same materialization + cache hygiene as graft.Bench: noop sink so
-    // nothing is pruned, caches AND localCheckpoint-persisted RDDs
-    // dropped so no query inherits a neighbor's blocks
     def materialize(name: String, dir: String): Unit =
-      SessionConf.restoring(spark) {
-        try graft.SparkEntry.queries(name)(spark, dir)
-          .write.format("noop").mode("overwrite").save()
-        finally {
-          spark.sharedState.cacheManager.clearCache()
-          spark.sparkContext.getPersistentRDDs.values
-            .foreach(_.unpersist(blocking = false))
-        }
-      }
-    def settle(): Unit = { System.gc(); Thread.sleep(250) }
-    def timeIt(f: => Unit): Double = {
-      val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
-    }
-    // (sec, shuffleMb, spillMb, peakTaskMemMb) of the MIN-time rep; -1s
-    // iff every rep failed. Metrics snapshot behind a listener-bus drain
-    // so async task-end events are counted before the reset.
-    def minOfReps(name: String, dir: String): (Double, Double, Double, Double) = {
-      val ts = (1 to reps).map { _ =>
-        metrics.reset()
-        val t = try timeIt(materialize(name, dir))
-                catch { case e: Throwable =>
-                  System.err.println(s"[scale] $name @ $dir FAILED: $e"); -1.0 }
-        org.apache.spark.graftbench.ListenerDrain.drain(spark.sparkContext, 5000)
-        val (sh, sp, pk) = metrics.snapMb()
-        settle(); (t, sh, sp, pk)
-      }
-      val ok = ts.filter(_._1 >= 0)
-      if (ok.isEmpty) (-1.0, -1.0, -1.0, -1.0) else ok.minBy(_._1)
-    }
+      Measure.materialize(spark)(graft.SparkEntry.queries(name)(spark, dir))
 
     // codegen/JVM warmup (not timed), smallest sf
     queryNames.foreach { n =>
@@ -474,26 +407,28 @@ object ScaleProbe {
     }
 
     val scales: Seq[(Int, String)] = (1, sfDir) +: copies.map(n => (n, scaledDir(n)))
-    val results: Seq[(String, Seq[(Int, (Double, Double, Double, Double))])] =
+    val results: Seq[(String, Seq[(Int, Measure.Rep)])] =
       queryNames.map { name =>
         val pts = scales.map { case (n, dir) =>
-          val m = minOfReps(name, dir)
+          val m = Measure.minOfReps(reps, metrics,
+            e => System.err.println(s"[scale] $name @ $dir FAILED: $e"))(
+            materialize(name, dir))
           System.err.println(
-            f"[scale] $name ${n}%2dx -> ${m._1}%7.2fs  shuffle=${m._2}%8.1fMB spill=${m._3}%7.1fMB peakTask=${m._4}%6.1fMB")
+            f"[scale] $name ${n}%2dx -> ${m.sec}%7.2fs  shuffle=${m.shuffleMb}%8.1fMB spill=${m.spillMb}%7.1fMB peakTask=${m.peakTaskMemMb}%6.1fMB")
           (n, m)
         }
         name -> pts
       }
 
     val qJson = results.map { case (name, pts) =>
-      def series(pick: ((Double, Double, Double, Double)) => Double, fmt: String) =
+      def series(pick: Measure.Rep => Double, fmt: String) =
         pts.map { case (n, m) => s""""$n":${fmt.format(pick(m))}""" }
           .mkString("{", ",", "}")
-      val exp = exponent(pts.map { case (n, m) => (n, m._1) })
+      val exp = exponent(pts.map { case (n, m) => (n, m.sec) })
         .map(e => f"$e%.3f").getOrElse("null")
-      s""""$name":{"sec":${series(_._1, "%.3f")},"exponent":$exp,""" +
-        s""""shuffle_mb":${series(_._2, "%.1f")},"spill_mb":${series(_._3, "%.1f")},""" +
-        s""""peak_task_mem_mb":${series(_._4, "%.1f")}}"""
+      s""""$name":{"sec":${series(_.sec, "%.3f")},"exponent":$exp,""" +
+        s""""shuffle_mb":${series(_.shuffleMb, "%.1f")},"spill_mb":${series(_.spillMb, "%.1f")},""" +
+        s""""peak_task_mem_mb":${series(_.peakTaskMemMb, "%.1f")}}"""
     }.mkString("{", ",", "}")
     println(
       s"""{"metric":"scale_probe","base_sf":"$sfDir","copies":${copies.mkString("[", ",", "]")},"reps":$reps,"date_shift":$dateShift,"queries":$qJson}""")

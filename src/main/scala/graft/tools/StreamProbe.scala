@@ -1,20 +1,24 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Encoders, SparkSession}
+import org.apache.spark.sql.Dataset
 import org.apache.spark.sql.streaming.StreamingQuery
 
+import graft.tools.Measure.productEncoder
+
 /** Diagnostic main for the streaming bench entries: replays one StreamOps
-  * operator exactly the way `graft.Bench` does (bounded MemoryStream,
-  * ~10 real micro-batches, noop sink) and prints the per-batch
-  * `StreamingQueryProgress` duration breakdown plus every state
-  * operator's custom metrics — the data needed to attribute wall-clock
-  * between query planning, state-store load/commit, and the actual work.
+  * operator exactly the way `graft.Bench` does ([[Measure.replay]]:
+  * bounded MemoryStream, ~10 real micro-batches, noop sink) and prints
+  * the per-batch `StreamingQueryProgress` duration breakdown plus every
+  * state operator's custom metrics — the data needed to attribute
+  * wall-clock between query planning, state-store load/commit, and the
+  * actual work.
   *
   * Knobs (env): SPARK_GRAFT_SF_DIR, SPARK_GRAFT_STATE_STORE
   * (rocksdb|hdfs), SPARK_GRAFT_CPUS (threads), SPARK_GRAFT_PARTS
   * (shuffle/state partitions; default = cpus), SPARK_GRAFT_PROBE_OP
   * (rollup|sessionize|neardedup|intervaljoin), SPARK_GRAFT_BATCHES
-  * (default 10).
+  * (default 10), SPARK_GRAFT_CHANGELOG / SPARK_GRAFT_BOUNDED_MEM (the
+  * state-store attribution levers, see [[Measure.session]]).
   *
   * Not part of any pipeline or bench artifact — a profiling tool only.
   */
@@ -23,54 +27,18 @@ object StreamProbe {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val parts = sys.env.getOrElse("SPARK_GRAFT_PARTS", cpus)
-    val stateStore = sys.env.getOrElse("SPARK_GRAFT_STATE_STORE", "rocksdb")
     val op = sys.env.getOrElse("SPARK_GRAFT_PROBE_OP", "rollup")
-    val nBatches = sys.env.getOrElse("SPARK_GRAFT_BATCHES", "10").toInt
+    val nBatches = Measure.envCount("SPARK_GRAFT_BATCHES").getOrElse(10)
 
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.extensions", classOf[graft.expr.catalyst.GraftExtensions].getName)
-      .config("spark.sql.shuffle.partitions", parts)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
     // measurement-only knob: "false" disables the no-new-data micro-batch
     // that advances the watermark after each data batch, pricing that
     // half of the commit protocol explicitly. NOT for the bench — late
     // state would only evict on the next data batch, changing semantics.
-    sys.env.get("SPARK_GRAFT_NO_DATA_BATCHES").foreach(v =>
-      spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", v))
-    if (stateStore == "rocksdb") {
-      spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      // measurement override, same contract as Bench's: "false" reverts
-      // to full-snapshot-upload commits (the e6 lever-table axis)
-      spark.conf.set(
-        "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled",
-        sys.env.getOrElse("SPARK_GRAFT_CHANGELOG", "true"))
-      spark.conf.set(
-        "spark.sql.streaming.stateStore.rocksdb.trackTotalNumberOfRows", "false")
-      // attribution knob (default matches the bench shape): "false"
-      // gives each store its own unbounded cache — isolates shared-
-      // block-cache mutex contention in per-commit metrics collection
-      spark.conf.set(
-        "spark.sql.streaming.stateStore.rocksdb.boundedMemoryUsage",
-        sys.env.getOrElse("SPARK_GRAFT_BOUNDED_MEM", "true"))
-    }
+    val spark = Measure.session(cpus, parts, extra =
+      sys.env.get("SPARK_GRAFT_NO_DATA_BATCHES")
+        .map("spark.sql.streaming.noDataMicroBatches.enabled" -> _).toMap)
 
-    implicit val eventEnc: Encoder[graft.streaming.StreamOps.Event] =
-      Encoders.product[graft.streaming.StreamOps.Event]
-    implicit val docEnc: Encoder[graft.streaming.StreamOps.Doc] =
-      Encoders.product[graft.streaming.StreamOps.Doc]
-    implicit val clickEnc: Encoder[(Long, java.sql.Timestamp)] =
-      Encoders.tuple(Encoders.scalaLong, Encoders.TIMESTAMP)
-    implicit val buyEnc: Encoder[(Long, java.sql.Timestamp, Double)] =
-      Encoders.tuple(Encoders.scalaLong, Encoders.TIMESTAMP,
-        Encoders.scalaDouble)
-    implicit val sc = spark.sqlContext
-
-    // per-batch progress lines shared by both replay shapes: wall-clock
+    // per-drain progress lines shared by both replay shapes: wall-clock
     // (of the whole drain — a drain covers the data batch AND the
     // watermark-advance batch for watermarked operators), the driver's
     // durationMs phase breakdown, then EVERY state operator
@@ -102,64 +70,6 @@ object StreamProbe {
       fresh.lastOption.foreach(p => lastReported = p.batchId)
     }
 
-    def finish(q: StreamingQuery, ckpt: java.nio.file.Path, t0: Long): Unit = {
-      q.stop()
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles).foreach(_.foreach(rm)); f.delete(); ()
-      }
-      rm(ckpt.toFile)
-      println(f"TOTAL ${(System.nanoTime() - t0) / 1e9}%.2fs " +
-        s"op=$op store=$stateStore parts=$parts cpus=$cpus batches=$nBatches")
-    }
-
-    def replay[T](rows: IndexedSeq[T], mk: Dataset[T] => Dataset[_])(
-        implicit enc: Encoder[T]): Unit = {
-      val in = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[T]
-      val ckpt = java.nio.file.Files.createTempDirectory("graft_probe_ckpt")
-      val q = mk(in.toDS()).writeStream.format("noop")
-        .option("checkpointLocation", ckpt.toString)
-        .outputMode("append").start()
-      val t0 = System.nanoTime()
-      try
-        rows.grouped(math.max(1, rows.length / nBatches)).foreach { b =>
-          val tb = System.nanoTime()
-          in.addData(b)
-          q.processAllAvailable()
-          report(q, (System.nanoTime() - tb) / 1e9)
-        }
-      finally finish(q, ckpt, t0)
-    }
-
-    // two-input twin of Bench.replay2: both sides advance in lockstep (a
-    // left chunk + a right chunk per micro-batch drain) so both
-    // watermarks move together and join-state expiry happens inside the
-    // probe — the same replay shape whose wall-clock the bench reports
-    // for e6_stream_interval_join
-    def replay2[A, B](lRows: IndexedSeq[A], rRows: IndexedSeq[B],
-        mk: (Dataset[A], Dataset[B]) => DataFrame)(
-        implicit ea: Encoder[A], eb: Encoder[B]): Unit = {
-      require(lRows.length == rRows.length,
-        "replay2 drives both watermarks in lockstep; equal-length inputs required")
-      val li = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[A]
-      val ri = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[B]
-      val ckpt = java.nio.file.Files.createTempDirectory("graft_probe_ckpt")
-      val q = mk(li.toDS(), ri.toDS()).writeStream.format("noop")
-        .option("checkpointLocation", ckpt.toString)
-        .outputMode("append").start()
-      val t0 = System.nanoTime()
-      try {
-        val lc = lRows.grouped(math.max(1, lRows.length / nBatches)).toSeq
-        val rc = rRows.grouped(math.max(1, rRows.length / nBatches)).toSeq
-        lc.zip(rc).foreach { case (lb, rb) =>
-          val tb = System.nanoTime()
-          val _ = li.addData(lb)
-          val __ = ri.addData(rb)
-          q.processAllAvailable()
-          report(q, (System.nanoTime() - tb) / 1e9)
-        }
-      } finally finish(q, ckpt, t0)
-    }
-
     // each op collects only its own input (all lazy): a neardedup probe
     // must not pay an events-table collect, nor rollup a documents one.
     // All inputs/parameters come from StreamBenchShapes — the one
@@ -167,33 +77,23 @@ object StreamProbe {
     // attributes the same query the bench wall-clocks.
     lazy val eventRows: IndexedSeq[graft.streaming.StreamOps.Event] =
       graft.streaming.StreamBenchShapes.loadEvents(spark, sfDir)
-    lazy val docRows: IndexedSeq[graft.streaming.StreamOps.Doc] =
-      graft.streaming.StreamBenchShapes.loadDocs(spark, sfDir)
-    lazy val clickRows: IndexedSeq[(Long, java.sql.Timestamp)] =
-      graft.streaming.StreamBenchShapes.clicksOf(eventRows)
-    lazy val buyRows: IndexedSeq[(Long, java.sql.Timestamp, Double)] =
-      graft.streaming.StreamBenchShapes.buysOf(eventRows)
+    def events(mk: Dataset[graft.streaming.StreamOps.Event] => Dataset[_]) =
+      Measure.replay(spark, eventRows, nBatches)(mk, report)
 
-    op match {
-      case "rollup" =>
-        replay(eventRows,
-          (ds: Dataset[graft.streaming.StreamOps.Event]) =>
-            graft.streaming.StreamOps.hourlyRollup(ds.toDF()))
-      case "sessionize" =>
-        replay(eventRows,
-          (ds: Dataset[graft.streaming.StreamOps.Event]) =>
-            graft.streaming.StreamOps.sessionize(ds))
+    val replayed = op match {
+      case "rollup" => events(ds => graft.streaming.StreamOps.hourlyRollup(ds.toDF()))
+      case "sessionize" => events(graft.streaming.StreamOps.sessionize(_))
       case "neardedup" =>
-        replay(docRows,
-          (ds: Dataset[graft.streaming.StreamOps.Doc]) =>
-            graft.streaming.StreamOps.streamingNearDedup(ds))
+        Measure.replay(spark, graft.streaming.StreamBenchShapes.loadDocs(spark, sfDir),
+          nBatches)(graft.streaming.StreamOps.streamingNearDedup(_), report)
       case "intervaljoin" =>
-        replay2(clickRows, buyRows,
-          (clicks: Dataset[(Long, java.sql.Timestamp)],
-           buys: Dataset[(Long, java.sql.Timestamp, Double)]) =>
-            graft.streaming.StreamBenchShapes.intervalJoinQuery(clicks, buys))
+        Measure.replay2(spark, graft.streaming.StreamBenchShapes.clicksOf(eventRows),
+          graft.streaming.StreamBenchShapes.buysOf(eventRows), nBatches)(
+          graft.streaming.StreamBenchShapes.intervalJoinQuery, report)
       case other => sys.error(s"unknown SPARK_GRAFT_PROBE_OP $other")
     }
+    println(f"TOTAL ${replayed.sec}%.2fs op=$op store=${Measure.stateStore} " +
+      s"parts=$parts cpus=$cpus batches=$nBatches")
     spark.stop()
   }
 }

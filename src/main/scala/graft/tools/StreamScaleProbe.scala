@@ -1,9 +1,9 @@
 package graft.tools
 
-import org.apache.spark.sql.{Dataset, Encoder, Encoders, SparkSession}
-import org.apache.spark.sql.streaming.StreamingQuery
+import org.apache.spark.sql.{Dataset, Encoder}
 
 import graft.streaming.StreamOps
+import graft.tools.Measure.productEncoder
 
 /** Dynamic scaling probe for the STREAMING family — the sibling of
   * [[ScaleProbe]] (which covers the batch paths). Turns the streaming
@@ -38,8 +38,8 @@ import graft.streaming.StreamOps
   *     as W*K dormant markers. The probe prints both curves; the spec
   *     (`StreamStateBoundSpec`) pins the same contrast at test size.
   *
-  * Replay discipline matches `graft.Bench`'s streaming section: bounded
-  * MemoryStream in ~10 real micro-batches (one per cohort for churn),
+  * Replay discipline is `graft.Bench`'s streaming section ([[Measure.replay]]):
+  * bounded MemoryStream in ~10 real micro-batches (one per cohort for churn),
   * noop sink, RocksDB state store + changelog checkpointing, state
   * partitions = SPARK_GRAFT_STREAM_PARTS (default 8 — the bench's
   * deployment-shaped choice), inputs collected/synthesized OUTSIDE the
@@ -72,7 +72,7 @@ import graft.streaming.StreamOps
   * SPARK_GRAFT_MASTER=local-cluster[n,cores,memMB] for real executor
   * JVMs (with SPARK_GRAFT_EXECUTOR_CLASSPATH — ABSOLUTE, asserted —
   * SPARK_GRAFT_EXECUTOR_OPTS for the JDK17 add-opens list, and
-  * SPARK_GRAFT_EXECUTOR_MEM; see the master block in main).
+  * SPARK_GRAFT_EXECUTOR_MEM; see [[Measure.session]]).
   *
   * A measurement tool, not part of any pipeline or the bench artifact.
   */
@@ -86,14 +86,14 @@ object StreamScaleProbe {
       batches: Int, maxStateRows: Long, finalStateRows: Long,
       maxStateBytes: Long)
 
-  private def statsOf(q: StreamingQuery, wallSec: Double): RunStats = {
-    val ps = q.recentProgress
+  private def statsOf(r: Measure.Replay): RunStats = {
+    val ps = r.progress
     def dur(p: org.apache.spark.sql.streaming.StreamingQueryProgress,
         k: String): Long =
       Option(p.durationMs.get(k)).map(_.longValue).getOrElse(0L)
     val rows = ps.map(_.stateOperators.map(_.numRowsTotal).sum)
     RunStats(
-      wallSec,
+      r.sec,
       ps.map(dur(_, "addBatch")).sum,
       ps.flatMap(_.stateOperators).map(_.commitTimeMs).sum,
       ps.length,
@@ -117,18 +117,14 @@ object StreamScaleProbe {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     // parts is interpolated unquoted into the JSON line — validate at
     // startup, never after a run's worth of measurements
-    val parts: Int = sys.env.get("SPARK_GRAFT_STREAM_PARTS")
-      .map(t => t.trim.toIntOption.filter(_ > 0).getOrElse(sys.error(
-        s"SPARK_GRAFT_STREAM_PARTS must be a positive int, got '$t'")))
-      .getOrElse(8)
-    val stateStore = sys.env.getOrElse("SPARK_GRAFT_STATE_STORE", "rocksdb")
-    val reps = sys.env.getOrElse("SPARK_GRAFT_STREAM_SCALE_REPS", "2").toInt
+    val parts = Measure.envCount("SPARK_GRAFT_STREAM_PARTS").getOrElse(8)
+    val reps = Measure.envCount("SPARK_GRAFT_STREAM_SCALE_REPS").getOrElse(2)
     val copies = sys.env.getOrElse("SPARK_GRAFT_STREAM_SCALE_COPIES", "3,10")
       .split(',').toSeq.map(_.trim).filter(_.nonEmpty).map(_.toInt)
       .filter(_ > 1).sorted
     val churnCohorts = sys.env.getOrElse("SPARK_GRAFT_CHURN_COHORTS", "5,50")
       .split(',').toSeq.map(_.trim).filter(_.nonEmpty).map(_.toInt).sorted
-    val churnUsers = sys.env.getOrElse("SPARK_GRAFT_CHURN_USERS", "500").toInt
+    val churnUsers = Measure.envCount("SPARK_GRAFT_CHURN_USERS").getOrElse(500)
     val axes = sys.env.getOrElse("SPARK_GRAFT_STREAM_SCALE_AXES",
       "volume,users,churn,e4,e6")
       .split(',').toSeq.map(_.trim).filter(_.nonEmpty).toSet
@@ -136,106 +132,17 @@ object StreamScaleProbe {
     // SPARK_GRAFT_MASTER=local-cluster[n,cores,memMB] puts REAL executor
     // JVMs under the streaming replays — per-executor RocksDB instances,
     // changelog/state traffic over real sockets — the streaming analog
-    // of the batch probe's round-12 exchange datum. The executor-env
-    // contract (explicit classpath/add-opens/memory, the ABSOLUTE-
-    // classpath assertion) is shared in [[ProbeSession.withMasterEnv]].
-    val spark = ProbeSession.withMasterEnv(SparkSession.builder(), cpus)
-      .config("spark.sql.extensions", classOf[graft.expr.catalyst.GraftExtensions].getName)
-      .config("spark.sql.shuffle.partitions", parts)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
+    // of the batch probe's round-12 exchange datum ([[Measure.session]]).
+    // The probe READS numRowsTotal — the row counter is the datum here,
+    // not a nicety to shed like the wall-clock bench does.
+    val spark = Measure.session(cpus, parts.toString, trackStateRows = true,
       // the churn axis runs up to ~2*W batches; sums over recentProgress
       // must cover ALL of them or addBatch/commit under-report silently
-      .config("spark.sql.streaming.numRecentProgressUpdates", "2000")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    if (stateStore == "rocksdb") {
-      // same store shape as the bench's streaming section (see
-      // graft.Bench `stateStore` notes for the rationale of each)
-      spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      spark.conf.set(
-        "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled",
-        "true")
-      spark.conf.set(
-        "spark.sql.streaming.stateStore.rocksdb.trackTotalNumberOfRows",
-        // the probe READS numRowsTotal — the row counter is the datum
-        // here, not a nicety to shed like the wall-clock bench does
-        "true")
-      spark.conf.set(
-        // default matches the bench's deployment shape; "false" is the
-        // attribution knob (same as StreamProbe's): giving every store
-        // an unbounded private cache isolates whether a superlinear
-        // compute segment is block-cache pressure or CPU-side work
-        "spark.sql.streaming.stateStore.rocksdb.boundedMemoryUsage",
-        sys.env.getOrElse("SPARK_GRAFT_BOUNDED_MEM", "true"))
-    }
+      extra = Map("spark.sql.streaming.numRecentProgressUpdates" -> "2000"))
 
-    implicit val eventEnc: Encoder[StreamOps.Event] =
-      Encoders.product[StreamOps.Event]
-    implicit val docEnc: Encoder[StreamOps.Doc] = Encoders.product[StreamOps.Doc]
-    implicit val clickEnc: Encoder[(Long, java.sql.Timestamp)] =
-      Encoders.tuple(Encoders.scalaLong, Encoders.TIMESTAMP)
-    implicit val buyEnc: Encoder[(Long, java.sql.Timestamp, Double)] =
-      Encoders.tuple(Encoders.scalaLong, Encoders.TIMESTAMP,
-        Encoders.scalaDouble)
-    implicit val sc = spark.sqlContext
-
-    def replay[T](rows: IndexedSeq[T], nBatches: Int,
-        mk: Dataset[T] => Dataset[_])(implicit enc: Encoder[T]): RunStats = {
-      val in = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[T]
-      val ckpt = java.nio.file.Files.createTempDirectory("graft_sscale_ckpt")
-      val q = mk(in.toDS()).writeStream.format("noop")
-        .option("checkpointLocation", ckpt.toString)
-        .outputMode("append").start()
-      val t0 = System.nanoTime()
-      try {
-        rows.grouped(math.max(1, rows.length / nBatches))
-          .foreach { b => in.addData(b); q.processAllAvailable() }
-        statsOf(q, (System.nanoTime() - t0) / 1e9)
-      } finally {
-        q.stop()
-        def rm(f: java.io.File): Unit = {
-          Option(f.listFiles).foreach(_.foreach(rm)); f.delete(); ()
-        }
-        rm(ckpt.toFile)
-      }
-    }
-
-    // two-input twin (same lockstep discipline as Bench.replay2: a left
-    // chunk + a right chunk per drain, so both watermarks advance
-    // together and join-state expiry stays inside the measurement)
-    def replay2[A, B](lRows: IndexedSeq[A], rRows: IndexedSeq[B], nBatches: Int,
-        mk: (Dataset[A], Dataset[B]) => org.apache.spark.sql.DataFrame)(
-        implicit ea: Encoder[A], eb: Encoder[B]): RunStats = {
-      require(lRows.length == rRows.length,
-        "replay2 drives both watermarks in lockstep; equal lengths required")
-      val li = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[A]
-      val ri = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[B]
-      val ckpt = java.nio.file.Files.createTempDirectory("graft_sscale_ckpt")
-      val q = mk(li.toDS(), ri.toDS()).writeStream.format("noop")
-        .option("checkpointLocation", ckpt.toString)
-        .outputMode("append").start()
-      val t0 = System.nanoTime()
-      try {
-        val lc = lRows.grouped(math.max(1, lRows.length / nBatches)).toSeq
-        val rc = rRows.grouped(math.max(1, rRows.length / nBatches)).toSeq
-        lc.zip(rc).foreach { case (lb, rb) =>
-          val _ = li.addData(lb)
-          val __ = ri.addData(rb)
-          q.processAllAvailable()
-        }
-        statsOf(q, (System.nanoTime() - t0) / 1e9)
-      } finally {
-        q.stop()
-        def rm(f: java.io.File): Unit = {
-          Option(f.listFiles).foreach(_.foreach(rm)); f.delete(); ()
-        }
-        rm(ckpt.toFile)
-      }
-    }
-
-    def settle(): Unit = { System.gc(); Thread.sleep(250) }
+    def replay[T: Encoder](rows: IndexedSeq[T], nBatches: Int,
+        mk: Dataset[T] => Dataset[_]): RunStats =
+      statsOf(Measure.replay(spark, rows, nBatches)(mk))
 
     /** min-wall rep of a replay (same min-of-reps contract as the batch
       * probe); state-size fields come from the min rep too — they are
@@ -244,9 +151,9 @@ object StreamScaleProbe {
       * change to the rep/settle discipline must reach them all at once.
       */
     def bestOf(run: => RunStats): RunStats =
-      (1 to reps).map { _ => val s = run; settle(); s }.minBy(_.wallSec)
-    def best[T](rows: IndexedSeq[T], nBatches: Int,
-        mk: Dataset[T] => Dataset[_])(implicit enc: Encoder[T]): RunStats =
+      Measure.fastest(reps)(run)(_.wallSec).get
+    def best[T: Encoder](rows: IndexedSeq[T], nBatches: Int,
+        mk: Dataset[T] => Dataset[_]): RunStats =
       bestOf(replay(rows, nBatches, mk))
 
     // ---- base inputs (outside every timed region) ----
@@ -312,8 +219,8 @@ object StreamScaleProbe {
     best(baseDocs.take(300), 3, neardedup)
     if (axes("e6")) {
       val warmEvents = baseEvents.take(1000)
-      replay2(graft.streaming.StreamBenchShapes.clicksOf(warmEvents),
-        graft.streaming.StreamBenchShapes.buysOf(warmEvents), 2,
+      Measure.replay2(spark, graft.streaming.StreamBenchShapes.clicksOf(warmEvents),
+        graft.streaming.StreamBenchShapes.buysOf(warmEvents), 2)(
         graft.streaming.StreamBenchShapes.intervalJoinQuery)
       ()
     }
@@ -391,8 +298,8 @@ object StreamScaleProbe {
       else runScales[(IndexedSeq[(Long, java.sql.Timestamp)],
           IndexedSeq[(Long, java.sql.Timestamp, Double)])]("e6_volume",
         n => (timeExtendedClicks(n), timeExtendedBuys(n)), _._1.length,
-        { case ((lc, rc), b) => bestOf(replay2(lc, rc, b,
-          graft.streaming.StreamBenchShapes.intervalJoinQuery)) })
+        { case ((lc, rc), b) => bestOf(statsOf(Measure.replay2(spark, lc, rc, b)(
+          graft.streaming.StreamBenchShapes.intervalJoinQuery))) })
 
     // churn: one micro-batch per cohort; reps=1 — the state-row curve is
     // deterministic and is the datum (wall time is secondary here)
@@ -403,7 +310,7 @@ object StreamScaleProbe {
           .map { case (mode, op) =>
             val rows = churnEvents(w, churnUsers)
             val s = replay(rows, w, op)
-            settle()
+            Measure.settle()
             System.err.println(f"[sscale] churn $mode%7s cohorts=$w%3d " +
               f"usersEver=${w * churnUsers}%7d stateRowsFinal=${s.finalStateRows}%7d " +
               f"stateRowsMax=${s.maxStateRows}%7d wall=${s.wallSec}%6.2fs")
@@ -453,7 +360,7 @@ object StreamScaleProbe {
     val sectionsTail = if (sections.isEmpty) "" else "," + sections.mkString(",")
     println(s"""{"metric":"stream_scale_probe","base_sf":"$sfDir",""" +
       s""""copies":${copies.mkString("[", ",", "]")},"reps":$reps,""" +
-      s""""parts":$parts,"store":"$stateStore","span_batches":$spanBatches""" +
+      s""""parts":$parts,"store":"${Measure.stateStore}","span_batches":$spanBatches""" +
       sectionsTail + "}")
     spark.stop()
   }

@@ -2,8 +2,8 @@ package org.apache.spark.graftbench
 
 import org.apache.spark.SparkContext
 
-/** Deterministic listener-bus drain for [[graft.Bench]]'s per-rep
-  * task-metric deltas.
+/** Deterministic listener-bus drain for the harnesses' per-rep
+  * task-metric reads ([[graft.tools.Measure.TaskMetrics]]).
   *
   * Spark delivers task-end events on async queues, so a metrics snapshot
   * taken right after a job can miss stragglers — and a fixed sleep only
